@@ -5,23 +5,27 @@ This operator IS the engine's replacement for the reference's in-memory
 shared S2ShapeIndex, candidates are produced by a hash equi-join on covering
 cell ids, then refined with the exact predicate kernels.
 
-Plan shape (scales to 10^12 rows / 1000 executors):
+Three plans, one per dim-size regime (scales to 10^12 rows / 1000
+executors):
 
-  regions (small dim, <= ~10^6 rows)
-      covering array<long> (precomputed or s2_coveringcellids)
-      -> explode -> (cell_id, region_id, geog)               [map-only]
-  points (the 10^12-row fact side)
-      leaf cell id from lng/lat (vectorized NumPy, no WKB)    [map-only]
-      -> ancestors at exactly the levels present in the region
-         coverings (collected once from the dim side)         [map-only]
-      -> equi-join on cell_id, broadcast the exploded dim     [NO shuffle]
-      -> refine with vectorized PIP (winding number), grouped
-         per distinct region per Arrow batch                  [map-only]
+  broadcast (PreparedRegions; dim WKB fits the broadcast guard)
+      regions: covering -> explode -> (cell key, region_id, bbox)  [driver]
+      points:  level-L ancestor key(s), pure Column bit math       [map-only]
+      -> broadcast hash join on the cell key + bbox condition      [NO shuffle]
+      -> refine by region id: winding-number PIP against polygons
+         shipped once per executor in a broadcast variable        [map-only]
+  subdivided_broadcast (dim WKB too large, per-cell state fits)
+      regions: covering -> explode -> per-cell SUBDIVIDED state (ref point
+               containment bit + only the edges crossing that cell)
+      -> broadcast hash join, crossing-parity refine               [NO shuffle]
+  subdivided (state too large to broadcast)
+      the same state table; interior cells join map-only, the boundary
+      band takes ONE salted fact-side hash exchange into the parity refine
 
 With a broadcastable dim the whole join is shuffle-free: the only wide
-operation in a typical query is the user's downstream aggregation.  For a
-large region side use broadcast=False: the same plan becomes a shuffle
-equi-join on cell_id; enable salting for hot cells via `salt`.
+operation in a typical query is the user's downstream aggregation.
+broadcast=False with refine_mode='auto' picks between the two subdivided
+plans from one tiny dim-side stats action.
 
 Correctness notes: a region's covering cells are disjoint (normalized
 covering), so a point's ancestor chain hits at most one covering cell per
@@ -31,7 +35,7 @@ of the region, so refine-only false positives are dropped, never misses.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -56,43 +60,6 @@ def leaf_cell_udf(lng: pd.Series, lat: pd.Series) -> pd.Series:
     if bad.any():
         out[bad] = None
     return out
-
-
-
-def _pip_refine_udf(model: str = "semi_open"):
-    """Vectorized refine factory: polygon WKB (repeating) x point lng/lat.
-
-    Groups the Arrow batch by distinct polygon bytes, decodes each polygon
-    once (scalar-prepare analog, sedona_udf_internal.h:849-867), then runs
-    one winding-number PIP over all points of that group.  model:
-    semi_open for contains, closed (boundary-inclusive) for intersects."""
-
-    @pandas_udf(T.BooleanType())
-    def pip_refine(geog: pd.Series, lng: pd.Series, lat: pd.Series) -> pd.Series:
-        n = len(geog)
-        out = np.empty(n, dtype=object)
-        lngv = lng.to_numpy(dtype=np.float64)
-        latv = lat.to_numpy(dtype=np.float64)
-        xyz = np.stack(C.lnglat_to_xyz(np.nan_to_num(lngv),
-                                       np.nan_to_num(latv)), axis=-1)
-        codes, uniques = pd.factorize(geog, use_na_sentinel=True)
-        for u, key in enumerate(uniques):
-            g = from_wkb(bytes(key))
-            ra, rb = g.ring_edges_xyz()
-            rows = np.where(codes == u)[0]
-            if len(ra) == 0:
-                out[rows] = False
-                continue
-            res = sphere.contains_points(xyz[rows], ra, rb, model=model)
-            out[rows] = res.astype(object)
-        bad = geog.isna().to_numpy() | np.isnan(lngv) | np.isnan(latv)
-        out[bad] = None
-        return pd.Series(out, dtype=object)
-
-    return pip_refine
-
-
-contains_lnglat_udf = _pip_refine_udf("semi_open")
 
 
 # per-worker prepared-region cache, keyed by a UUID minted in
@@ -543,6 +510,24 @@ def choose_salt(points: DataFrame, *, lng: str = "lng", lat: str = "lat",
     return int(min(max_salt, int(np.ceil(skew / target_ratio))))
 
 
+def _bbox_ok(p, e, lng: str, lat: str):
+    """Bbox prefilter term of a candidate join condition (predicates.cc:174-
+    186 analog): fact side `p`'s lng/lat inside dim side `e`'s region bbox
+    (_xmin/_ymin/_xmax/_ymax), widened by 1e-9 degrees.  A bbox with
+    _xmin > _xmax spans the antimeridian; a null bbox (EMPTY region) passes.
+
+    It belongs IN the join condition: a post-join .where() would be combined
+    with the refine predicate and pulled ABOVE ArrowEvalPython by Catalyst's
+    python-UDF extraction, defeating the prefilter."""
+    eps = 1e-9
+    lat_ok = (p[lat] >= e["_ymin"] - eps) & (p[lat] <= e["_ymax"] + eps)
+    lng_in = F.when(
+        e["_xmin"] <= e["_xmax"],
+        (p[lng] >= e["_xmin"] - eps) & (p[lng] <= e["_xmax"] + eps)
+    ).otherwise((p[lng] >= e["_xmin"] - eps) | (p[lng] <= e["_xmax"] + eps))
+    return e["_xmin"].isNull() | (lat_ok & lng_in)
+
+
 def spatial_join(points: DataFrame, regions: DataFrame, *,
                  lng: str = "lng", lat: str = "lat",
                  region_geog: str = "geog",
@@ -556,14 +541,29 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
                  key_col: Optional[str] = None,
                  refine_mode: str = "auto",
                  coords: str = "lnglat",
-                 prefilter: bool = True,
-                 sort_boundary: bool = False) -> DataFrame:
+                 prefilter: bool = True) -> DataFrame:
     """Join each point row to every region whose polygon satisfies
     `predicate` (contains/intersects) — the engine's flagship operator.
 
     points: any DataFrame with lng/lat columns (degrees).
     regions: dim with polygon WKB + covering array<long>.
     Returns points' columns + regions' columns (minus internals).
+
+    predicate: 'contains' or 'intersects'.  Both run the same point refine:
+    for point facts they differ only for points exactly ON a region edge
+    (measure-zero for float inputs).
+
+    Plans (see the module docstring):
+      * broadcast=True (default) or a :class:`PreparedRegions` dim: the
+        broadcast plan — map-only candidate join, refine by region id
+        against polygons broadcast once per executor.  A plain dim that
+        overflows the broadcast guard falls back to the plans below.
+      * broadcast=False: refine_mode picks the per-cell SUBDIVIDED-state
+        plan — 'subdivided_broadcast' (state table broadcast, fact side
+        map-only; raises when the state overflows the guard),
+        'subdivided' (one salted fact-side hash exchange), or 'auto'
+        (default: one tiny dim-side stats action broadcasts the state
+        when it fits and shuffles otherwise).
 
     level: when set, the dim covering must be at exactly this fixed S2
     level; each point then emits a SINGLE join key (its level-L ancestor)
@@ -587,15 +587,23 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     mutually exclusive with salting (a bucketed fact cannot re-key — rely
     on AQE skew handling or finer buckets instead).
 
+    salt: split each hot cell key into `salt` replicas on the fact-side
+    exchange of the 'subdivided' plan (see choose_salt); the broadcast
+    plans have no exchange and ignore it.
+
+    coords='leaf' (broadcast=False, 'subdivided'/'auto'): CELL-CENTER
+    corpus — the fact side carries only the leaf id in `leaf_col` and the
+    refine reconstructs the exact cell center.
+
     regions may also be a :class:`PreparedRegions` (from prepare_regions) to
     amortize the dim-side preparation (broadcast, bbox, covering explode)
     across many point-side joins, or a :class:`PreparedRegionsSubdivided`
-    (from prepare_regions_subdivided) for the shuffle-family plans — the
+    (from prepare_regions_subdivided) for the subdivided plans — the
     exploded subdivided-state table, its broadcast-fit stats, and the
     prefilter key set are then built once and reused; refine_mode 'auto'
     resolves from the prepared stats with no extra job.
 
-    prefilter (shuffle paths only): broadcast the dim's DISTINCT cell-key
+    prefilter ('subdivided' only): broadcast the dim's DISTINCT cell-key
     set (8 B/cell — broadcastable even when nothing else about the dim is)
     and left-semi filter the fact side BEFORE its exchange, so rows that
     cannot match any covering cell never shuffle.  This is the manual form
@@ -605,14 +613,20 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     codegen hash probe per row.  Default on; set False only when the fact
     is known to be ~fully covered by the dim.
     """
+    if predicate not in ("contains", "intersects"):
+        raise ValueError("predicate must be 'contains' or 'intersects': "
+                         f"{predicate!r}")
+    if refine_mode not in ("auto", "subdivided", "subdivided_broadcast"):
+        raise ValueError("refine_mode must be 'auto', 'subdivided' or "
+                         f"'subdivided_broadcast': {refine_mode!r}")
     if coords not in ("lnglat", "leaf"):
         raise ValueError(f"coords must be 'lnglat' or 'leaf': {coords!r}")
     if coords == "leaf":
-        # cell-center semantics exist only on the subdivided plans; every
-        # other plan dereferences lng/lat — fail loudly instead of
+        # cell-center semantics exist only on the subdivided plans; the
+        # broadcast plan dereferences lng/lat — fail loudly instead of
         # silently joining on un-quantized coordinates
         if isinstance(regions, PreparedRegions) or broadcast or \
-                refine_mode not in ("auto", "subdivided"):
+                refine_mode == "subdivided_broadcast":
             raise ValueError(
                 "coords='leaf' requires broadcast=False and "
                 "refine_mode='subdivided' (or 'auto')")
@@ -624,16 +638,10 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     if isinstance(regions, PreparedRegionsSubdivided):
         # prepared shuffle-family dim: state already built/checkpointed,
         # broadcast flag is moot (this prep exists for non-broadcastable
-        # dims), and only the subdivided plans can consume it
+        # dims)
         sub_prep = regions
         region_id = sub_prep.region_id
         broadcast = False
-        if refine_mode not in ("auto", "subdivided", "subdivided_broadcast"):
-            raise ValueError(
-                "a PreparedRegionsSubdivided dim supports only "
-                "refine_mode 'auto'/'subdivided'/'subdivided_broadcast' "
-                f"(got {refine_mode!r}); the prepared state table carries "
-                "no region WKB for the rows/index/cogroup plans")
     elif isinstance(regions, PreparedRegions):
         prep = regions
         region_id = prep.region_id
@@ -707,20 +715,8 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
         # broadcast-dim fast path: the candidate join carries ONLY the int
         # region id; polygons travel once via a broadcast variable and are
         # decoded/prepared per worker (geog WKB never crosses Arrow per row).
-        # The bbox prefilter (predicates.cc:174-186 analog) is part of the
-        # JOIN CONDITION — a post-join .where() would be combined with the
-        # refine predicate and pulled ABOVE ArrowEvalPython by Catalyst's
-        # python-UDF extraction, defeating the prefilter.
         ex = prep.exploded
-        eps = 1e-9
-        lat_ok = (pts[lat] >= ex["_ymin"] - eps) & (pts[lat] <= ex["_ymax"] + eps)
-        lng_in = F.when(
-            ex["_xmin"] <= ex["_xmax"],
-            (pts[lng] >= ex["_xmin"] - eps) & (pts[lng] <= ex["_xmax"] + eps)
-        ).otherwise((pts[lng] >= ex["_xmin"] - eps)
-                    | (pts[lng] <= ex["_xmax"] + eps))
-        bbox_ok = ex["_xmin"].isNull() | (lat_ok & lng_in)
-        cond = (pts["_ck"] == ex["_ck"]) & bbox_ok
+        cond = (pts["_ck"] == ex["_ck"]) & _bbox_ok(pts, ex, lng, lat)
         cand = (pts.join(F.broadcast(ex), cond, "inner")
                 .drop(ex["_ck"])
                 .drop("_xmin", "_ymin", "_xmax", "_ymax"))
@@ -731,350 +727,176 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
                                     F.col(lat), F.col("_full")))
         return refined.drop("_leaf", "_ck", "_full")
 
-    # non-broadcastable dim.  Four plans (all brute-force-verified);
-    # 'auto' picks between the two subdivided forms with one tiny
-    # dim-side stats action (broadcast the state when it fits, shuffle
-    # otherwise):
-    #
-    # subdivided: ONE fact-side shuffle on
-    #   the (salted) cell key; candidates carry the matched cell's packed
-    #   SUBDIVIDED state blob (ref-containment bit + only the edges
-    #   intersecting that cell, ~150 B) instead of ~1 KB region WKB, and
-    #   the refine is vectorized crossing parity (parity_refine_udf) —
-    #   no WKB decode at all.  Interior-cell candidates ship a null blob.
-    # subdivided_broadcast: same state, but the state TABLE is broadcast
-    #   — fact side MAP-ONLY, zero fact exchange.  The right plan when
-    #   the dim's WKB can't broadcast but its per-cell state can (state
-    #   excludes polygon interiors, so it's usually far smaller);
-    #   measured 2.7x faster than the shuffling form on the 80M-mention
-    #   bench.  Raises when the state overflows the broadcast guard.
-    # rows: the WKB-shipping variant of the shuffle plan (per-distinct-
-    #   WKB batched winding refine; interior candidates pass with a NULL
-    #   WKB argument).  Kept as the reference implementation and for
-    #   geographies whose per-cell edge subsets approach the full WKB.
-    #   Negative result (round 4, measured): replacing the Python refine
-    #   with a crossing-parity F.aggregate over an edge-tensor column was
-    #   9x SLOWER (71 s vs 7.6 s on the 20M-mention probe at 2 cores) —
-    #   Spark evaluates higher-order-function lambdas INTERPRETED per
-    #   element, outside whole-stage codegen, so "pure SQL" is not the
-    #   fast path for per-row geometry folds.
-    # index: the dim's WKB is too big to broadcast but its
-    #   (cell -> region_id) INDEX is ~24 bytes/row — broadcast THAT, so
-    #   candidate generation stays MAP-ONLY and only candidates shuffle
-    #   (by region id) into the cogroup refine.  The right plan when the
-    #   fact rows are wide or candidates are a small fraction of the fact
-    #   (here candidates ~ fact, so the cogroup's Arrow hop loses to the
-    #   plain shuffle).
-    # cogroup: ids-only shuffle join + a second candidates shuffle into
-    #   the cogroup refine — only right when geographies are much larger
-    #   than fact rows AND the id index can't broadcast.
-    #
-    # Hot-cell skew on shuffling joins is salted (plus AQE skew-join);
-    # the cogroup refine reuses the salt to split hot-region groups.
-    if refine_mode == "auto":
-        # cost-based: build the per-cell SUBDIVIDED state (ref-point
-        # containment bit + only the ring edges intersecting the matched
-        # cell, ~150 B/boundary cell) and let ONE tiny dim-side stats
-        # action decide between its two consumers —
-        #   state broadcastable  -> subdivided_broadcast (fact MAP-ONLY,
-        #     zero fact exchange; beats shipping the blob with every
-        #     candidate row at ANY match rate — on a geo-dense corpus the
-        #     rows form ships candidates x 150 B through the exchange)
-        #   state too large      -> subdivided (single salted fact-side
-        #     shuffle, blob rides the candidate rows)
-        refine_mode = "subdivided_auto"
-
-    if refine_mode in ("subdivided", "subdivided_broadcast",
-                       "subdivided_auto"):
-        exploded = sub_prep.exploded if sub_prep is not None \
-            else _subdivided_exploded(regions, region_geog, covering_col)
-        # coords="leaf": CELL-CENTER corpus (reference compact tagged
-        # encoding, encoding.py CELL_CENTER) — the fact side carries ONLY
-        # the 8 B leaf id; the refine reconstructs the exact cell center.
-        # 3x fewer bytes through the fact exchange; requires the corpus to
-        # have been quantized to cell centers at ingest (lng/lat columns
-        # are ignored and may be absent).
-        leaf_mode = coords == "leaf"
-        pts = pts.withColumnRenamed("_ck", "_ckp")
-        if not leaf_mode:
-            pts = pts.drop("_leaf")
-        if sub_prep is not None:
-            # stats were paid once at prepare time; resolve the mode from
-            # them with no extra action
-            if refine_mode == "subdivided_auto":
-                refine_mode = "subdivided_broadcast" \
-                    if sub_prep.fits_broadcast else "subdivided"
-            elif refine_mode == "subdivided_broadcast" and \
-                    not sub_prep.fits_broadcast:
-                raise ValueError(
-                    f"subdivided state too large to broadcast "
-                    f"({sub_prep.state_cells} cells, "
-                    f"{sub_prep.state_bytes} bytes); use "
-                    "refine_mode='subdivided'")
-        n_state_cells = sub_prep.state_cells if sub_prep is not None else None
-        if refine_mode != "subdivided" and sub_prep is None:
-            # the 100 TB answer for a dim whose WKB can NOT broadcast: the
-            # per-cell SUBDIVIDED state (~150 B/boundary cell, no polygon
-            # bytes anywhere) usually still CAN — broadcasting it keeps the
-            # fact side MAP-ONLY (zero fact exchange; the only shuffle in a
-            # typical query is the downstream rollup), which is what
-            # actually scales with executors.
-            # materialize ONCE: without this the stats guard runs the
-            # per-region subdivided_state_udf over the whole dim, and the
-            # broadcast then re-executes the same UDF from scratch at join
-            # time.  localCheckpoint blocks carry no CacheManager entry —
-            # the ContextCleaner frees them with the DataFrame.
-            exploded = exploded.localCheckpoint(eager=True)
-            stats = exploded.agg(
-                F.count("*").alias("n"),
-                F.sum(F.octet_length("_state")).alias("b")).collect()[0]
-            n_state_cells = int(stats.n or 0)
-            fits = int(stats.n or 0) <= MAX_BROADCAST_INDEX_ROWS and \
-                int(stats.b or 0) <= MAX_BROADCAST_DIM_BYTES
-            if refine_mode == "subdivided_auto":
-                # auto: broadcast when allowed, shuffle otherwise
-                refine_mode = "subdivided_broadcast" if fits \
-                    else "subdivided"
-            elif not fits:
-                # explicit broadcast request overflows: raise, like every
-                # other broadcast guard (callers fall back to 'subdivided')
-                raise ValueError(
-                    f"subdivided state too large to broadcast ({stats.n} "
-                    f"cells, {stats.b} bytes); use refine_mode='subdivided'")
-        state_bcast = refine_mode == "subdivided_broadcast"
-        if state_bcast:
-            salt = 0
-        drop_cols = ["_ckp", "_ck", "_full", "_state",
-                     "_xmin", "_ymin", "_xmax", "_ymax"] \
-            + (["_salt", "_salt_r"] if salt else []) \
-            + (["_leaf"] if leaf_mode else [])
-
-        def _cond(e, p, salted: bool):
-            """Join condition against dim slice `e` for fact side `p`:
-            cell-key equality, bbox prefilter (skipped in leaf mode), and
-            the salt replica match when `salted`."""
-            c = p["_ckp"] == e["_ck"]
-            if not leaf_mode:
-                eps = 1e-9
-                lat_ok = (p[lat] >= e["_ymin"] - eps) & \
-                    (p[lat] <= e["_ymax"] + eps)
-                lng_in = F.when(
-                    e["_xmin"] <= e["_xmax"],
-                    (p[lng] >= e["_xmin"] - eps)
-                    & (p[lng] <= e["_xmax"] + eps)
-                ).otherwise((p[lng] >= e["_xmin"] - eps)
-                            | (p[lng] <= e["_xmax"] + eps))
-                c = c & (e["_xmin"].isNull() | (lat_ok & lng_in))
-            if salted:
-                c = c & (p["_salt"] == e["_salt_r"])
-            return c
-
-        refine = parity_refine_leaf_udf(F.col("_state"), F.col("_leaf")) \
-            if leaf_mode else \
-            parity_refine_udf(F.col("_state"), F.col(lng), F.col(lat))
-        if state_bcast:
-            # state fits a broadcast: fact side is map-only (one scan,
-            # zero fact exchange); interior candidates pass with a NULL
-            # state blob (a null bitmap on the wire)
-            cand = pts.join(F.broadcast(exploded), _cond(exploded, pts, False),
-                            "inner")
-            refined = cand.where(
-                F.when(F.col("_full"), F.lit(True))
-                .otherwise(F.coalesce(refine, F.lit(False))))
-            return refined.drop(*drop_cols)
-
-        # FULL/BOUNDARY dim split (round 5): candidates matched through a
-        # provably-interior covering cell are contained by construction,
-        # yet they used to ride the exchange AND the Arrow hop anyway (a
-        # pandas UDF is evaluated on every row of its projection; F.when
-        # cannot short-circuit it) — and on the bench corpus they are ~2/3
-        # of all candidates.
-        if sub_prep is None and prefilter:
-            # one state-UDF pass total: the full slice's broadcast build,
-            # the boundary join side, and the boundary key set would each
-            # re-run the per-region subdivided_state_udf otherwise
-            exploded = exploded.localCheckpoint(eager=True)
-            if n_state_cells is None:
-                # explicit refine_mode='subdivided' skipped the auto-stats
-                # action; the checkpointed count is one trivial job
-                n_state_cells = exploded.count()
-        if prefilter and n_state_cells is not None and \
-                n_state_cells > MAX_BROADCAST_INDEX_ROWS:
-            # r5 ADVICE: prefilter=True used to broadcast ex_f — the
-            # full-cell dim slice with ALL region payload columns —
-            # unconditionally, ignoring every broadcast guard; a huge dim
-            # could OOM the driver/executors.  When the exploded cell count
-            # overflows the index guard (the same bound the 8 B/cell key
-            # set and the ~24 B/cell interior map share), fall back to the
-            # non-prefilter ReuseExchange form: both slices hash-join the
-            # identical fact child and the fact shuffle materializes once.
-            prefilter = False
-        ex_f = exploded.where(F.col("_full")).drop("_state")
-        ex_b = exploded.where(~F.col("_full"))
-        if prefilter:
-            # The interior (cell -> region) map has the SAME cardinality as
-            # the semi-join prefilter key set — if one broadcasts, so does
-            # the other.  So the interior mass joins MAP-ONLY (broadcast
-            # inner join, no bbox test needed: a full cell lies inside the
-            # region, hence inside its bbox) and never reaches the
-            # exchange; only the boundary band (fact rows whose key is a
-            # non-full covering cell — a broadcast left-semi picks them
-            # out) rides the salted hash exchange and the parity refine.
-            # At 100 TB the exchange+Python volume is the boundary
-            # fraction, not the candidate count.  prefilter=False opts out
-            # of BOTH broadcasts (keys assumed non-broadcastable): the two
-            # slices then hash-join the identical fact child and
-            # Catalyst's ReuseExchange materializes the fact shuffle once.
-            cand_f = pts.join(F.broadcast(ex_f), _cond(ex_f, pts, False),
-                              "inner")
-            bkeys = ex_b.select(F.col("_ck").alias("_ckf")).distinct()
-            ptsb = pts.join(F.broadcast(bkeys),
-                            pts["_ckp"] == bkeys["_ckf"], "left_semi")
-        else:
-            cand_f = None
-            ptsb = pts
-        if salt:
-            nsalt = int(salt)
-            salt_src = F.hash(F.col("_leaf")) if leaf_mode \
-                else F.hash(F.col(lng), F.col(lat))
-            ptsb = ptsb.withColumn("_salt", F.pmod(salt_src, F.lit(nsalt)))
-            ex_b = ex_b.withColumn(
-                "_salt_r", F.explode(F.sequence(F.lit(0), F.lit(nsalt - 1))))
-        cand_b = ptsb.join(ex_b.hint("SHUFFLE_HASH"),
-                           _cond(ex_b, ptsb, bool(salt)), "inner")
-        if sort_boundary:
-            # r5 verdict item 4 experiment: cluster same-cell candidates
-            # within each post-join partition so the parity refine's
-            # per-batch state factorization sees long same-blob runs.
-            # MEASURED NEGATIVE RESULT (r6, 50M mentions, local[32],
-            # interleaved A/B): median 2.24 s -> 3.76 s — the partition-
-            # local sort of candidate rows costs more than the locality
-            # it buys (pd.factorize over the binary blob column already
-            # groups at C speed without any ordering).  Kept opt-in,
-            # default OFF; see OPTIMIZATION_r06.md.
-            cand_b = cand_b.sortWithinPartitions("_ck")
-        refined_b = cand_b.where(F.coalesce(refine, F.lit(False)))
-        if cand_f is None:
-            ex_fs = ex_f.withColumn(
-                "_salt_r",
-                F.explode(F.sequence(F.lit(0), F.lit(int(salt) - 1)))) \
-                if salt else ex_f
-            cand_f = ptsb.join(ex_fs.hint("SHUFFLE_HASH"),
-                               _cond(ex_fs, ptsb, bool(salt)), "inner")
-        return cand_f.drop(*drop_cols).unionByName(
-            refined_b.drop(*drop_cols))
-
-    if refine_mode == "index":
-        n_idx = regions.select(F.sum(F.size(covering_col))).collect()[0][0]
-        if n_idx is None or int(n_idx) > MAX_BROADCAST_INDEX_ROWS:
+    # non-broadcastable dim WKB: the per-cell SUBDIVIDED state (ref-point
+    # containment bit + only the ring edges intersecting the matched cell,
+    # ~150 B/boundary cell, no polygon bytes anywhere) replaces the region
+    # WKB, and the refine is vectorized crossing parity (parity_refine_udf)
+    # — no WKB decode at all.  Interior-cell candidates need no refine.
+    #   subdivided_broadcast: the state TABLE is broadcast — fact side
+    #     MAP-ONLY, zero fact exchange.  The state excludes polygon
+    #     interiors, so it usually broadcasts when the WKB cannot; measured
+    #     2.7x faster than the shuffling form on the 80M-mention bench.
+    #   subdivided: ONE fact-side shuffle on the (salted) cell key for the
+    #     boundary band; the state blob rides the candidate rows.
+    # 'auto' lets ONE tiny dim-side stats action decide: broadcast the
+    # state when it fits (it beats shipping the blob with every candidate
+    # row at ANY match rate), shuffle otherwise.
+    exploded = sub_prep.exploded if sub_prep is not None \
+        else _subdivided_exploded(regions, region_geog, covering_col)
+    # coords="leaf": CELL-CENTER corpus (reference compact tagged
+    # encoding, encoding.py CELL_CENTER) — the fact side carries ONLY
+    # the 8 B leaf id; the refine reconstructs the exact cell center.
+    # 3x fewer bytes through the fact exchange; requires the corpus to
+    # have been quantized to cell centers at ingest (lng/lat columns
+    # are ignored and may be absent).
+    leaf_mode = coords == "leaf"
+    pts = pts.withColumnRenamed("_ck", "_ckp")
+    if not leaf_mode:
+        pts = pts.drop("_leaf")
+    if sub_prep is not None:
+        # stats were paid once at prepare time; resolve the mode from
+        # them with no extra action
+        if refine_mode == "auto":
+            refine_mode = "subdivided_broadcast" \
+                if sub_prep.fits_broadcast else "subdivided"
+        elif refine_mode == "subdivided_broadcast" and \
+                not sub_prep.fits_broadcast:
             raise ValueError(
-                f"refine_mode='index' needs the exploded cell index to fit "
-                f"a broadcast (<= {MAX_BROADCAST_INDEX_ROWS} cells)")
-        idx = (regions
-               .select(region_id, F.explode(covering_col).alias("_cell"))
-               .withColumn("_ck", cell_join_key(F.col("_cell")))
-               .drop("_cell"))
-        cand = (pts.join(F.broadcast(idx), "_ck")  # MAP-ONLY candidates
-                .drop("_leaf", "_ck"))
-        return _cogroup_refine(cand, regions, region_geog, region_id,
-                               covering_col, lng, lat, predicate,
-                               int(salt) if salt else 1)
+                f"subdivided state too large to broadcast "
+                f"({sub_prep.state_cells} cells, "
+                f"{sub_prep.state_bytes} bytes); use "
+                "refine_mode='subdivided'")
+    n_state_cells = sub_prep.state_cells if sub_prep is not None else None
+    if refine_mode != "subdivided" and sub_prep is None:
+        # materialize ONCE: without this the stats guard runs the
+        # per-region subdivided_state_udf over the whole dim, and the
+        # broadcast then re-executes the same UDF from scratch at join
+        # time.  localCheckpoint blocks carry no CacheManager entry —
+        # the ContextCleaner frees them with the DataFrame.
+        exploded = exploded.localCheckpoint(eager=True)
+        stats = exploded.agg(
+            F.count("*").alias("n"),
+            F.sum(F.octet_length("_state")).alias("b")).collect()[0]
+        n_state_cells = int(stats.n or 0)
+        fits = int(stats.n or 0) <= MAX_BROADCAST_INDEX_ROWS and \
+            int(stats.b or 0) <= MAX_BROADCAST_DIM_BYTES
+        if refine_mode == "auto":
+            # auto: broadcast when allowed, shuffle otherwise
+            refine_mode = "subdivided_broadcast" if fits \
+                else "subdivided"
+        elif not fits:
+            # explicit broadcast request overflows: raise, like every
+            # other broadcast guard (callers fall back to 'subdivided')
+            raise ValueError(
+                f"subdivided state too large to broadcast ({stats.n} "
+                f"cells, {stats.b} bytes); use refine_mode='subdivided'")
+    state_bcast = refine_mode == "subdivided_broadcast"
+    if state_bcast:
+        salt = 0
+    drop_cols = ["_ckp", "_ck", "_full", "_state",
+                 "_xmin", "_ymin", "_xmax", "_ymax"] \
+        + (["_salt", "_salt_r"] if salt else []) \
+        + (["_leaf"] if leaf_mode else [])
 
-    if refine_mode == "rows":
-        # bbox prefilter INSIDE the join condition (same rationale as the
-        # broadcast path: a post-join .where() would merge with the refine
-        # predicate and be pulled above ArrowEvalPython).  Dropping
-        # cell-matched-but-bbox-outside rows JVM-side cuts the Arrow hop
-        # into the Python refine — the WKB-per-candidate-row transfer that
-        # dominates this path's memory bandwidth — by the bbox selectivity
-        # (~10x on the synthetic corpus).  The bbox and the interior-cell
-        # flags are one UDF pass over the DIM (pre-explode), not the fact.
-        from ..functions.geo import st_boundingbox
-        exploded = regions \
-            .withColumn("_bb", st_boundingbox(F.col(region_geog))) \
-            .withColumn("_ifl", interior_flags_udf(F.col(region_geog),
-                                                   F.col(covering_col))) \
-            .select("*", F.posexplode(covering_col).alias("_pos", "cell_id")) \
-            .withColumn("_full", F.coalesce(F.col("_ifl")[F.col("_pos")],
-                                            F.lit(False))) \
-            .drop(covering_col, "_ifl", "_pos") \
-            .withColumn("_ck", cell_join_key(F.col("cell_id"))).drop("cell_id") \
-            .withColumn("_xmin", F.col("_bb.xmin")) \
-            .withColumn("_ymin", F.col("_bb.ymin")) \
-            .withColumn("_xmax", F.col("_bb.xmax")) \
-            .withColumn("_ymax", F.col("_bb.ymax")).drop("_bb")
-        # prune the internal leaf column BEFORE the fact-side exchange:
-        # only the join key + coordinates need to shuffle
-        pts = pts.withColumnRenamed("_ck", "_ckp").drop("_leaf")
-        if prefilter:
-            # same runtime semi-join reduction as the subdivided branch:
-            # the dim's distinct cell-key set broadcasts at 8 B/cell, and
-            # fact rows outside every covering cell never reach the
-            # exchange
-            keys = regions.select(F.explode(covering_col).alias("_c")) \
-                .select(cell_join_key(F.col("_c")).alias("_ckf")).distinct()
-            pts = pts.join(F.broadcast(keys),
-                           pts["_ckp"] == keys["_ckf"], "left_semi")
-        if salt:
-            nsalt = int(salt)
-            pts = pts.withColumn("_salt", F.pmod(F.hash(F.col(lng), F.col(lat)),
-                                                 F.lit(nsalt)))
-            exploded = exploded.withColumn(
-                "_salt_r", F.explode(F.sequence(F.lit(0), F.lit(nsalt - 1))))
-        eps = 1e-9
-        lat_ok = (pts[lat] >= exploded["_ymin"] - eps) & \
-            (pts[lat] <= exploded["_ymax"] + eps)
-        lng_in = F.when(
-            exploded["_xmin"] <= exploded["_xmax"],
-            (pts[lng] >= exploded["_xmin"] - eps)
-            & (pts[lng] <= exploded["_xmax"] + eps)
-        ).otherwise((pts[lng] >= exploded["_xmin"] - eps)
-                    | (pts[lng] <= exploded["_xmax"] + eps))
-        bbox_ok = exploded["_xmin"].isNull() | (lat_ok & lng_in)
-        cond = (pts["_ckp"] == exploded["_ck"]) & bbox_ok
-        if salt:
-            cond = cond & (pts["_salt"] == exploded["_salt_r"])
-        # SHUFFLE_HASH on the small exploded dim: without the hint the
-        # extra bbox condition makes Catalyst pick SortMergeJoin, which
-        # SORTS the whole fact side — the dominant cost at 10^8 rows
-        model = "semi_open" if predicate == "contains" else "closed"
-        drop_cols = ["_ckp", "_ck", "_full", "_xmin", "_ymin", "_xmax",
-                     "_ymax"] + (["_salt", "_salt_r"] if salt else [])
-        # FULL/BOUNDARY dim split (round 5, same as the subdivided branch):
-        # interior-cell candidates are contained by construction and never
-        # enter the Python refine — not even as null-WKB rows, which still
-        # paid the per-row Arrow transfer of lng/lat.  Both joins
-        # hash-partition the identical fact child, so the fact shuffle is
-        # materialized once (ReuseExchange).
-        ex_f = exploded.where(F.col("_full"))
-        ex_b = exploded.where(~F.col("_full"))
-        cand_f = pts.join(ex_f.hint("SHUFFLE_HASH"), cond, "inner")
-        cand_b = pts.join(ex_b.hint("SHUFFLE_HASH"), cond, "inner")
-        refine = _pip_refine_udf(model)(
-            F.col(region_geog), F.col(lng), F.col(lat))
-        refined_b = cand_b.where(F.coalesce(refine, F.lit(False)))
-        return cand_f.drop(*drop_cols).unionByName(
-            refined_b.drop(*drop_cols))
+    def _cond(e, p, salted: bool):
+        """Join condition against dim slice `e` for fact side `p`:
+        cell-key equality, bbox prefilter (skipped in leaf mode), and
+        the salt replica match when `salted`."""
+        c = p["_ckp"] == e["_ck"]
+        if not leaf_mode:
+            c = c & _bbox_ok(p, e, lng, lat)
+        if salted:
+            c = c & (p["_salt"] == e["_salt_r"])
+        return c
 
-    # refine_mode == "cogroup": ids-only shuffle join then cogroup refine
-    exploded = (regions
-                .select(region_id, F.explode(covering_col).alias("_cell"))
-                .withColumn("_ck", cell_join_key(F.col("_cell")))
-                .drop("_cell"))
+    refine = parity_refine_leaf_udf(F.col("_state"), F.col("_leaf")) \
+        if leaf_mode else \
+        parity_refine_udf(F.col("_state"), F.col(lng), F.col(lat))
+    if state_bcast:
+        # state fits a broadcast: fact side is map-only (one scan,
+        # zero fact exchange); interior candidates pass with a NULL
+        # state blob (a null bitmap on the wire)
+        cand = pts.join(F.broadcast(exploded), _cond(exploded, pts, False),
+                        "inner")
+        refined = cand.where(
+            F.when(F.col("_full"), F.lit(True))
+            .otherwise(F.coalesce(refine, F.lit(False))))
+        return refined.drop(*drop_cols)
+
+    # FULL/BOUNDARY dim split (round 5): candidates matched through a
+    # provably-interior covering cell are contained by construction,
+    # yet they used to ride the exchange AND the Arrow hop anyway (a
+    # pandas UDF is evaluated on every row of its projection; F.when
+    # cannot short-circuit it) — and on the bench corpus they are ~2/3
+    # of all candidates.
+    if sub_prep is None and prefilter:
+        # one state-UDF pass total: the full slice's broadcast build,
+        # the boundary join side, and the boundary key set would each
+        # re-run the per-region subdivided_state_udf otherwise
+        exploded = exploded.localCheckpoint(eager=True)
+        if n_state_cells is None:
+            # explicit refine_mode='subdivided' skipped the auto-stats
+            # action; the checkpointed count is one trivial job
+            n_state_cells = exploded.count()
+    if prefilter and n_state_cells is not None and \
+            n_state_cells > MAX_BROADCAST_INDEX_ROWS:
+        # r5 ADVICE: prefilter=True used to broadcast ex_f — the
+        # full-cell dim slice with ALL region payload columns —
+        # unconditionally, ignoring every broadcast guard; a huge dim
+        # could OOM the driver/executors.  When the exploded cell count
+        # overflows the index guard (the same bound the 8 B/cell key
+        # set and the ~24 B/cell interior map share), fall back to the
+        # non-prefilter ReuseExchange form: both slices hash-join the
+        # identical fact child and the fact shuffle materializes once.
+        prefilter = False
+    ex_f = exploded.where(F.col("_full")).drop("_state")
+    ex_b = exploded.where(~F.col("_full"))
+    if prefilter:
+        # The interior (cell -> region) map has the SAME cardinality as
+        # the semi-join prefilter key set — if one broadcasts, so does
+        # the other.  So the interior mass joins MAP-ONLY (broadcast
+        # inner join, no bbox test needed: a full cell lies inside the
+        # region, hence inside its bbox) and never reaches the
+        # exchange; only the boundary band (fact rows whose key is a
+        # non-full covering cell — a broadcast left-semi picks them
+        # out) rides the salted hash exchange and the parity refine.
+        # At 100 TB the exchange+Python volume is the boundary
+        # fraction, not the candidate count.  prefilter=False opts out
+        # of BOTH broadcasts (keys assumed non-broadcastable): the two
+        # slices then hash-join the identical fact child and
+        # Catalyst's ReuseExchange materializes the fact shuffle once.
+        cand_f = pts.join(F.broadcast(ex_f), _cond(ex_f, pts, False),
+                          "inner")
+        bkeys = ex_b.select(F.col("_ck").alias("_ckf")).distinct()
+        ptsb = pts.join(F.broadcast(bkeys),
+                        pts["_ckp"] == bkeys["_ckf"], "left_semi")
+    else:
+        cand_f = None
+        ptsb = pts
     if salt:
         nsalt = int(salt)
-        pts = pts.withColumn("_salt", F.pmod(F.hash(F.col(lng), F.col(lat)),
-                                             F.lit(nsalt)))
-        exploded = exploded.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(nsalt - 1))))
-        join_keys = ["_ck", "_salt"]
-    else:
-        join_keys = ["_ck"]
-    cand = (pts.join(exploded, join_keys, "inner")
-            .drop("_leaf", "_ck", *(["_salt"] if salt else [])))
-    return _cogroup_refine(cand, regions, region_geog, region_id,
-                           covering_col, lng, lat, predicate,
-                           int(salt) if salt else 1)
+        salt_src = F.hash(F.col("_leaf")) if leaf_mode \
+            else F.hash(F.col(lng), F.col(lat))
+        ptsb = ptsb.withColumn("_salt", F.pmod(salt_src, F.lit(nsalt)))
+        ex_b = ex_b.withColumn(
+            "_salt_r", F.explode(F.sequence(F.lit(0), F.lit(nsalt - 1))))
+    # SHUFFLE_HASH on the small exploded dim: without the hint the extra
+    # bbox condition makes Catalyst pick SortMergeJoin, which SORTS the
+    # whole fact side — the dominant cost at 10^8 rows.  (Sorting the
+    # boundary candidates by cell key for refine locality was measured
+    # and lost, OPTIMIZATION_r06.md.)
+    cand_b = ptsb.join(ex_b.hint("SHUFFLE_HASH"),
+                       _cond(ex_b, ptsb, bool(salt)), "inner")
+    refined_b = cand_b.where(F.coalesce(refine, F.lit(False)))
+    if cand_f is None:
+        ex_fs = ex_f.withColumn(
+            "_salt_r",
+            F.explode(F.sequence(F.lit(0), F.lit(int(salt) - 1)))) \
+            if salt else ex_f
+        cand_f = ptsb.join(ex_fs.hint("SHUFFLE_HASH"),
+                           _cond(ex_fs, ptsb, bool(salt)), "inner")
+    return cand_f.drop(*drop_cols).unionByName(
+        refined_b.drop(*drop_cols))
 
 
 def spatial_count(points: DataFrame, regions, *,
@@ -1172,16 +994,7 @@ def spatial_count(points: DataFrame, regions, *,
         bkeys = bex.select(F.col("_ck").alias("_ckf")).distinct()
         bpts = pts.join(F.broadcast(bkeys), pts["_ckp"] == F.col("_ckf"),
                         "left_semi")
-    eps = 1e-9
-    lat_ok = (bpts[lat] >= bex["_ymin"] - eps) & \
-        (bpts[lat] <= bex["_ymax"] + eps)
-    lng_in = F.when(
-        bex["_xmin"] <= bex["_xmax"],
-        (bpts[lng] >= bex["_xmin"] - eps) & (bpts[lng] <= bex["_xmax"] + eps)
-    ).otherwise((bpts[lng] >= bex["_xmin"] - eps)
-                | (bpts[lng] <= bex["_xmax"] + eps))
-    bbox_ok = bex["_xmin"].isNull() | (lat_ok & lng_in)
-    cond = (bpts["_ckp"] == bex["_ck"]) & bbox_ok
+    cond = (bpts["_ckp"] == bex["_ck"]) & _bbox_ok(bpts, bex, lng, lat)
     cand = bpts.join(
         F.broadcast(bex) if prep.fits_broadcast
         else bex.hint("SHUFFLE_HASH"), cond, "inner")
@@ -1195,82 +1008,6 @@ def spatial_count(points: DataFrame, regions, *,
     # ~half the AQE stages of the r5 two-term sum
     return (full_rows.unionByName(refined.select(region_id))
             .groupBy(region_id).agg(F.count("*").alias(count_col)))
-
-
-def _cogroup_refine(cand: DataFrame, regions: DataFrame, region_geog: str,
-                    region_id: str, covering_col: str, lng: str, lat: str,
-                    predicate: str, nsplit: int) -> DataFrame:
-    """Exact refine of (point, region_id) candidates by COGROUPING with the
-    dim on region id: each region's WKB crosses the Arrow boundary once per
-    group; nsplit > 1 splits hot-region groups (skew)."""
-    group_keys = [region_id]
-    # dim side of the cogroup uses RENAMED keys: both sides descend from
-    # `regions`, and identical attribute lineage trips the ambiguous-
-    # self-join analyzer check (cogroup matches grouping keys by position)
-    reg_geo = regions.select(F.col(region_id).alias("_rid_g"), region_geog)
-    right_keys = ["_rid_g"]
-    if nsplit > 1:
-        cand = cand.withColumn("_rs", F.pmod(F.hash(F.col(lng), F.col(lat)),
-                                             F.lit(nsplit)))
-        group_keys = [region_id, "_rs"]
-        reg_geo = reg_geo.withColumn(
-            "_rs_g", F.explode(F.sequence(F.lit(0), F.lit(nsplit - 1))))
-        right_keys = ["_rid_g", "_rs_g"]
-
-    out_schema = cand.drop("_rs").schema if nsplit > 1 else cand.schema
-    out_cols = [f.name for f in out_schema.fields]
-    model = "semi_open" if predicate == "contains" else "closed"
-
-    def refine_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return left.iloc[0:0][out_cols]  # typed empty frame
-        g = from_wkb(bytes(right.iloc[0, right.columns.get_loc(region_geog)]))
-        ra, rb = g.ring_edges_xyz()
-        if len(ra) == 0:
-            keep = np.zeros(len(left), dtype=bool)
-        else:
-            xyz = np.stack(C.lnglat_to_xyz(
-                left[lng].to_numpy(dtype=np.float64),
-                left[lat].to_numpy(dtype=np.float64)), axis=-1)
-            keep = sphere.contains_points(xyz, ra, rb, model=model)
-        return left.loc[keep, out_cols]
-
-    refined = (cand.groupBy(*group_keys)
-               .cogroup(reg_geo.groupBy(*right_keys))
-               .applyInPandas(refine_fn, out_schema))
-    # re-attach the dim's remaining attributes (small projection join);
-    # renamed key avoids the self-join ambiguity with the dim lineage
-    rest = regions.drop(covering_col, region_geog) \
-        .withColumnRenamed(region_id, "_rid_rest")
-    if len(rest.columns) > 1:
-        refined = refined.join(
-            rest, refined[region_id] == rest["_rid_rest"]).drop("_rid_rest")
-    return refined
-
-
-@pandas_udf(T.ArrayType(T.BooleanType()))
-def interior_flags_udf(wkb: pd.Series, covering: pd.Series) -> pd.Series:
-    """Per dim row: 'cell fully inside the region' flags aligned with the
-    covering array — the interior-covering shortcut (reference
-    INDEXED/SUBDIVIDED distinction, index.h:52-91) computed DISTRIBUTED
-    for the non-broadcast join path (the broadcast path computes the same
-    flags driver-side in prepare_regions).  A candidate matched through an
-    interior cell is provably contained, so the Python refine's WKB
-    argument can be nulled for it — Arrow then ships a null bitmap instead
-    of ~1 KB of repeated polygon bytes per interior candidate."""
-    out = []
-    for b, cov in zip(wkb, covering):
-        if b is None or cov is None:
-            out.append(None)
-            continue
-        cells = np.array(cov, dtype=np.int64).view(np.uint64)
-        g = from_wkb(bytes(b))
-        ra, rb = g.ring_edges_xyz()
-        if len(ra) == 0 or len(cells) == 0:
-            out.append([False] * len(cells))
-            continue
-        out.append(_interior_cell_flags(cells, ra, rb).tolist())
-    return pd.Series(out, dtype=object)
 
 
 # ---------------------------------------------------------------------------
@@ -1288,9 +1025,9 @@ def interior_flags_udf(wkb: pd.Series, covering: pd.Series) -> pd.Series:
 
 # per-cell state travels as ONE compact binary blob, not per-row arrays:
 # Arrow list columns materialize a Python list per row inside the pandas
-# UDF (measured 14x slower than the WKB rows path at 20M candidates), while
-# a binary column pd.factorize()s at C speed — same trick as the WKB
-# refine, but each unique is ~150 B of edges instead of ~1 KB of polygon.
+# UDF (measured 14x slower than a binary WKB column at 20M candidates),
+# while a binary column pd.factorize()s at C speed — and each unique is
+# ~150 B of edges instead of ~1 KB of polygon.
 # Blob layout (little-endian): u8 rin | 3 x f8 ref_xyz | k x 6 x f8 edges.
 _SUBDIV_STATE_TYPE = T.ArrayType(T.StructType([
     T.StructField("full", T.BooleanType()),
@@ -1424,10 +1161,10 @@ def _parity_refine_impl(state: pd.Series, lng: pd.Series,
     semi_open/closed join models) or ref_in XOR crossing-parity of the
     arc(ref, point) against the cell's edge subset.
 
-    The blob column factorizes at C speed (same pattern as the WKB rows
-    refine); each unique unpacks ONCE per batch via np.frombuffer, then a
-    single ragged gather feeds one vectorized arcs_cross over every
-    (candidate, edge) pair — no per-row Python anywhere."""
+    The blob column factorizes at C speed; each unique unpacks ONCE per
+    batch via np.frombuffer, then a single ragged gather feeds one
+    vectorized arcs_cross over every (candidate, edge) pair — no per-row
+    Python anywhere."""
     n = len(state)
     lngv = lng.to_numpy(dtype=np.float64)
     latv = lat.to_numpy(dtype=np.float64)
@@ -1696,8 +1433,7 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
                       region_geog: str = "geog", region_id: str = "region_id",
                       init_radius_m: float = 250_000.0,
                       max_rounds: Optional[int] = None,
-                      distance_col: str = "distance_m",
-                      materialize: bool = True) -> DataFrame:
+                      distance_col: str = "distance_m") -> DataFrame:
     """Scale-path kNN: buffered-covering candidate pruning with radius
     doubling (the distributed analog of S2ClosestEdgeQuery's chord-angle
     pruning, SURVEY.md §2.6).
@@ -1828,10 +1564,10 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
         out = out.unionByName(part)
     # the per-round parts are already materialized (checkpoint blocks, no
     # CacheManager entries), so the union is lineage-free up to the
-    # optional fallback: no final re-materialization pass is needed for
-    # EITHER materialize mode, and there is nothing for the caller to
-    # unpersist — blocks are freed when the returned DataFrame (which
-    # references the part RDDs) is garbage-collected.
+    # optional fallback: no final re-materialization pass is needed, and
+    # there is nothing for the caller to unpersist — blocks are freed when
+    # the returned DataFrame (which references the part RDDs) is
+    # garbage-collected.
     return out
 
 

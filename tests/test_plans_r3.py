@@ -20,12 +20,15 @@ def test_geo_overlap_area_no_nested_loop(spark):
 
 
 def test_rows_mode_no_sort_merge_join(spark):
+    """The salted shuffle plan (refine_mode='subdivided', which replaced
+    the old per-row 'rows' refine) keeps its SHUFFLE_HASH hint and its bbox
+    prefilter inside the join condition."""
     from s2geography_spark.operators.spatial_join import spatial_join
     from s2geography_spark.sources.regions import regions_df
     pts = spark.createDataFrame([(1, 10.0, 10.0)], "id long, lng double, lat double")
     j = spatial_join(pts, regions_df(spark, 24, covering_level=6),
                      predicate="contains", broadcast=False, salt=4, level=6,
-                     refine_mode="rows")
+                     refine_mode="subdivided")
     plan = _plan(j)
     # the SHUFFLE_HASH hint must hold: SortMergeJoin would sort the whole
     # fact side; and the bbox prefilter must be INSIDE the join condition
@@ -64,49 +67,11 @@ def test_knn_covering_single_prelevel_job(spark):
         assert got == min(12, buffered_covering_level(radius))
 
 
-def test_bucketed_fact_join_no_fact_exchange(spark):
+def test_bucketed_fact_join_subdivided_no_fact_exchange(spark):
     """key_col over a bucketed fact: the join's ONLY exchange is the dim
     side shuffling to the bucket count — the fact scan feeds the join
-    directly (the pay-bucketing-once-at-ingest 100 TB pattern)."""
-    from s2geography_spark.functions.cells import cell_join_key, cell_parent
-    from s2geography_spark.operators.spatial_join import (leaf_cell_udf,
-                                                          spatial_join)
-    from s2geography_spark.sources.regions import regions_df
-    pts = spark.createDataFrame(
-        [(x + 0.5, y + 0.5) for x in range(-150, 150, 4)
-         for y in range(-60, 60, 4)], "lng double, lat double")
-    pts = (pts.withColumn("leaf", leaf_cell_udf(F.col("lng"), F.col("lat")))
-           .withColumn("ck", cell_join_key(cell_parent(F.col("leaf"), 6))))
-    spark.sql("DROP TABLE IF EXISTS _bkt_plan_test")
-    (pts.write.mode("overwrite").bucketBy(8, "ck").sortBy("ck")
-     .format("parquet").saveAsTable("_bkt_plan_test"))
-    try:
-        j = spatial_join(spark.table("_bkt_plan_test"),
-                         regions_df(spark, 24, covering_level=6),
-                         predicate="contains", broadcast=False, level=6,
-                         key_col="ck", refine_mode="rows")
-        plan = _plan(j)
-        # the fact side must never re-key: no exchange partitions on the
-        # fact's _ckp (the bucketed scan feeds the join directly).  Dim-
-        # side exchanges (covering explode to the bucket count + the tiny
-        # distinct key set feeding the semi-filter broadcast) are fine.
-        assert "Exchange hashpartitioning(_ckp" not in plan, plan
-        assert "ShuffledHashJoin [_ckp" in plan, plan
-        # correctness unchanged vs the unbucketed rows mode
-        ref = spatial_join(spark.table("_bkt_plan_test"),
-                           regions_df(spark, 24, covering_level=6),
-                           predicate="contains", broadcast=False, level=6,
-                           leaf_col="leaf", refine_mode="rows")
-        got = {(r.lng, r.lat, r.region_id) for r in j.collect()}
-        exp = {(r.lng, r.lat, r.region_id) for r in ref.collect()}
-        assert got == exp and got
-    finally:
-        spark.sql("DROP TABLE IF EXISTS _bkt_plan_test")
-
-
-def test_bucketed_fact_join_subdivided_no_fact_exchange(spark):
-    """The round-5 subdivided refine must preserve the bucketed fact's
-    exchange-free plan and its rows, so the bucketed bench can run on it."""
+    directly (the pay-bucketing-once-at-ingest 100 TB pattern) — and the
+    rows equal the unbucketed leaf_col join's."""
     from s2geography_spark.functions.cells import cell_join_key, cell_parent
     from s2geography_spark.operators.spatial_join import (leaf_cell_udf,
                                                           spatial_join)
@@ -125,12 +90,17 @@ def test_bucketed_fact_join_subdivided_no_fact_exchange(spark):
                          predicate="contains", broadcast=False, level=6,
                          key_col="ck", refine_mode="subdivided")
         plan = _plan(j)
+        # the fact side must never re-key: no exchange partitions on the
+        # fact's _ckp (the bucketed scan feeds the join directly).  Dim-
+        # side exchanges (covering explode to the bucket count + the tiny
+        # distinct key set feeding the semi-filter broadcast) are fine.
         assert "Exchange hashpartitioning(_ckp" not in plan, plan
         assert "ShuffledHashJoin [_ckp" in plan, plan
+        # correctness unchanged vs the unbucketed join
         ref = spatial_join(spark.table("_bkt_plan_test_sub"),
                            regions_df(spark, 24, covering_level=6),
                            predicate="contains", broadcast=False, level=6,
-                           leaf_col="leaf", refine_mode="rows")
+                           leaf_col="leaf", refine_mode="subdivided")
         got = {(r.lng, r.lat, r.region_id) for r in j.collect()}
         exp = {(r.lng, r.lat, r.region_id) for r in ref.collect()}
         assert got == exp and got
@@ -204,3 +174,34 @@ def test_subdivided_split_noprefilter_reuses_fact_exchange(spark):
     agg.collect()  # AQE finalizes reuse only at execution
     plan = _plan(agg)
     assert "ReusedExchange" in plan, plan
+
+
+def test_benchmarked_join_plans(spark):
+    """The two spatial_join plans the benchmark times, plan-asserted.
+
+    Prepared broadcast join (level-8 PreparedRegions): no hash exchange
+    anywhere and exactly one Python node, the region-id refine.  Shuffle-
+    family call on a small dim (broadcast=False, level=8, refine_mode
+    'auto'): resolves to the broadcast subdivided state, so the fact side
+    never hash-exchanges and the parity refine is the only Python node."""
+    from s2geography_spark.operators.spatial_join import (prepare_regions,
+                                                          spatial_join)
+    from s2geography_spark.sources.regions import regions_df
+    pts = spark.createDataFrame(
+        [(x + 0.5, y + 0.5) for x in range(-150, 150, 10)
+         for y in range(-60, 60, 10)], "lng double, lat double")
+
+    prep = prepare_regions(spark, regions_df(spark, 96, covering_level=8))
+    plan = _plan(spatial_join(pts, prep, predicate="contains", level=8))
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "BroadcastHashJoin" in plan, plan
+
+    dense = spatial_join(pts, regions_df(spark, 24, covering_level=8),
+                         broadcast=False, level=8)
+    plan = _plan(dense)
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "ShuffledHashJoin" not in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("parity_refine_udf") == 1, plan

@@ -195,9 +195,9 @@ def test_oriented_complement_through_sql_pipeline(spark):
 
 
 # ---------------------------------------------------------------------------
-# rows-mode interior-cell shortcut: the shuffle join must return exactly the
-# broadcast join's pairs, boundary points included (the shortcut nulls the
-# Python refine's WKB argument for provably-interior candidates)
+# interior-cell shortcut on the salted shuffle join: it must return exactly
+# the broadcast join's pairs, boundary points included (candidates in
+# provably-interior cells skip the Python refine)
 # ---------------------------------------------------------------------------
 
 def test_shuffle_rows_interior_shortcut_matches_broadcast(spark):
@@ -216,7 +216,7 @@ def test_shuffle_rows_interior_shortcut_matches_broadcast(spark):
     for predicate in ("contains", "intersects"):
         a = spatial_join(pts, regions, predicate=predicate, level=6)
         b = spatial_join(pts, regions, predicate=predicate, broadcast=False,
-                         salt=2, level=6, refine_mode="rows")
+                         salt=2, level=6, refine_mode="subdivided")
         sa = {(r.id, r.region_id) for r in a.select("id", "region_id").collect()}
         sb = {(r.id, r.region_id) for r in b.select("id", "region_id").collect()}
         assert sa == sb, predicate

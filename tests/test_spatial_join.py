@@ -74,9 +74,12 @@ def test_spatial_join_matches_brute_force(spark, mentions):
 
 
 def test_spatial_join_shuffle_path_matches(spark, mentions):
+    """The salted shuffle plan against brute force.  refine_mode is pinned:
+    on this small dim 'auto' resolves to subdivided_broadcast, which has
+    no exchange and drops the salt."""
     regions = regions_df(spark, 24)
     joined = spatial_join(mentions, regions, predicate="contains",
-                          broadcast=False, salt=4)
+                          broadcast=False, salt=4, refine_mode="subdivided")
     got = {(r.url, r.mention_idx, r.region_id)
            for r in joined.select("url", "mention_idx", "region_id").collect()}
     assert got == brute_force_pairs(mentions.collect(), 24)
@@ -89,6 +92,21 @@ def test_spatial_join_intersects_predicate(spark, mentions):
            for r in joined.select("url", "mention_idx", "region_id").collect()}
     # for interior points intersects == contains
     assert got == brute_force_pairs(mentions.collect(), 24)
+
+
+def test_spatial_join_rejects_unknown_modes(spark):
+    """An unknown refine_mode or predicate raises instead of silently
+    running some other plan or predicate."""
+    pts = spark.createDataFrame([(0, 10.0, 10.0)],
+                                "pid long, lng double, lat double")
+    regions = regions_df(spark, 4)
+    for mode in ("rows", "index", "cogroup", "subdivided_auto", "nope"):
+        with pytest.raises(ValueError, match="'auto', 'subdivided' or "
+                                             "'subdivided_broadcast'"):
+            spatial_join(pts, regions, broadcast=False, refine_mode=mode)
+    for predicate in ("within", "covers", "CONTAINS"):
+        with pytest.raises(ValueError, match="'contains' or 'intersects'"):
+            spatial_join(pts, regions, predicate=predicate)
 
 
 def test_special_regions_join(spark):
@@ -171,33 +189,10 @@ def test_knn_covering_matches_brute_force(spark, mentions):
     assert got == exp
 
 
-def test_spatial_join_shuffle_cogroup_matches(spark, mentions):
-    """cogroup refine mode (for very fat dims): same result, WKB crosses
-    Arrow once per region group."""
-    regions = regions_df(spark, 24)
-    joined = spatial_join(mentions.limit(500), regions, predicate="contains",
-                          broadcast=False, salt=4, refine_mode="cogroup")
-    got = {(r.url, r.mention_idx, r.region_id)
-           for r in joined.select("url", "mention_idx", "region_id").collect()}
-    expected = brute_force_pairs(mentions.limit(500).collect(), 24)
-    assert got == expected
-
-
-def test_spatial_join_index_mode_matches(spark, mentions):
-    """index refine mode: broadcast (cell -> region_id) index, map-only
-    candidates, cogroup refine — same result as brute force."""
-    regions = regions_df(spark, 24)
-    joined = spatial_join(mentions.limit(500), regions, predicate="contains",
-                          broadcast=False, refine_mode="index")
-    got = {(r.url, r.mention_idx, r.region_id)
-           for r in joined.select("url", "mention_idx", "region_id").collect()}
-    assert got == brute_force_pairs(mentions.limit(500).collect(), 24)
-
-
 def test_boundary_band_broadcast_matches_shuffle(spark):
     """Round-3 fix: points planted within ~1 um .. 1 km of region edges get
     identical join rows on the float32 broadcast refine (with its float64
-    boundary-band recheck) and the float64 shuffle refine."""
+    boundary-band recheck) and the shuffle plan's float64 parity refine."""
     n_regions = 12
     rs = np.arange(n_regions)
     lng0, lat0, lng1, lat1 = region_corners(rs)
@@ -221,7 +216,7 @@ def test_boundary_band_broadcast_matches_shuffle(spark):
     bcast = spatial_join(pts, regions, predicate="contains", level=6,
                          broadcast=True)
     shuf = spatial_join(pts, regions, predicate="contains", level=6,
-                        broadcast=False, refine_mode="rows")
+                        broadcast=False, refine_mode="subdivided")
     got_b = {(r.pid, r.region_id) for r in bcast.collect()}
     got_s = {(r.pid, r.region_id) for r in shuf.collect()}
     assert got_b == got_s
@@ -296,33 +291,34 @@ def test_prepared_regions_exploded_guard(spark):
                         max_cells=ncells - 1)
 
 
-def test_subdivided_equals_rows_refine(spark, mentions):
+def test_subdivided_matches_brute_force(spark, mentions):
     """The subdivided-cell parity refine (round-5 shuffle path) must produce
-    exactly the WKB winding refine's pairs, on the corpus and on the
-    antimeridian/pole special regions."""
+    exactly the brute-force pairs on the corpus, and exactly the direct
+    winding kernel's pairs on the antimeridian/pole special regions."""
+    from s2geography_spark.core import cellid as C
+
     regions = regions_df(spark, 24)
     sub = spatial_join(mentions, regions, predicate="contains",
                        broadcast=False, refine_mode="subdivided")
-    wkb = spatial_join(mentions, regions, predicate="contains",
-                       broadcast=False, refine_mode="rows")
     key = ["url", "mention_idx", "region_id"]
     a = {tuple(r) for r in sub.select(*key).collect()}
-    b = {tuple(r) for r in wkb.select(*key).collect()}
-    assert a == b and len(a) > 0
+    assert a == brute_force_pairs(mentions.collect(), 24) and len(a) > 0
 
-    pts = spark.createDataFrame(
-        [(0, 179.9, 0.0), (1, -179.9, 1.0), (2, 0.0, 89.0),
-         (3, 0.0, 0.0), (4, 150.0, -40.0), (5, 177.0, 3.0)],
-        "pid long, lng double, lat double")
+    rows = [(0, 179.9, 0.0), (1, -179.9, 1.0), (2, 0.0, 89.0),
+            (3, 0.0, 0.0), (4, 150.0, -40.0), (5, 177.0, 3.0)]
+    pts = spark.createDataFrame(rows, "pid long, lng double, lat double")
     specials = special_regions_df(spark)
     got = {(r.pid, r.region_id) for r in
            spatial_join(pts, specials, predicate="contains", broadcast=False,
                         refine_mode="subdivided")
            .select("pid", "region_id").collect()}
-    ref = {(r.pid, r.region_id) for r in
-           spatial_join(pts, specials, predicate="contains", broadcast=False,
-                        refine_mode="rows")
-           .select("pid", "region_id").collect()}
+    xyz = np.stack(C.lnglat_to_xyz(np.array([r[1] for r in rows]),
+                                   np.array([r[2] for r in rows])), axis=-1)
+    ref = set()
+    for reg in specials.select("region_id", "geog").collect():
+        ra, rb = from_wkb(bytes(reg.geog)).ring_edges_xyz()
+        inside = sphere.contains_points(xyz, ra, rb, model="semi_open")
+        ref |= {(r[0], reg.region_id) for r, hit in zip(rows, inside) if hit}
     assert got == ref
     assert (0, 1000) in got and (2, 1001) in got
 
@@ -345,9 +341,9 @@ def test_subdivided_broadcast_mode(spark, mentions):
 
 def test_subdivided_fuzz_random_holed_polygons(spark):
     """Randomized robustness: 12 random convex-ish polygons with random
-    rectangular holes, 400 random points each — the subdivided parity
-    refine, the WKB rows refine, and the direct contains kernel must
-    agree on every (point, region) pair."""
+    rectangular holes, 440 random points — the subdivided parity refine
+    and the direct contains kernel must agree on every (point, region)
+    pair."""
     from s2geography_spark.core import ops as _ops
     from s2geography_spark.core.geog import Geog, from_wkb, to_wkb
     from s2geography_spark.functions.geo import s2_coveringcellids
@@ -390,12 +386,7 @@ def test_subdivided_fuzz_random_holed_polygons(spark):
            spatial_join(pdf, regions, predicate="contains", broadcast=False,
                         refine_mode="subdivided").select("pid", "region_id")
            .collect()}
-    wkb_mode = {(r.pid, r.region_id) for r in
-                spatial_join(pdf, regions, predicate="contains",
-                             broadcast=False, refine_mode="rows")
-                .select("pid", "region_id").collect()}
-    assert sub == wkb_mode
-    # spot-verify against the direct kernel
+    # verify against the direct kernel
     direct = set()
     for pid, lng, lat in pts:
         p = from_wkb(bytes(
@@ -448,7 +439,7 @@ def test_leaf_only_cell_center_join(spark, mentions):
 def test_prepared_subdivided_regions(spark, mentions):
     """prepare_regions_subdivided: the prepared-dim shuffle join must
     produce exactly the inline subdivided join's pairs in every resolved
-    mode, reuse must not rebuild state, and unsupported refine modes /
+    mode, reuse must not rebuild state, and unknown refine modes /
     oversized explicit broadcasts must raise."""
     from s2geography_spark.operators.spatial_join import (
         prepare_regions_subdivided, spatial_join)
@@ -476,8 +467,7 @@ def test_prepared_subdivided_regions(spark, mentions):
                            broadcast=False, refine_mode="subdivided",
                            prefilter=False).select(*key).collect()}
     assert got_nf == exp
-    # WKB-consuming plans cannot run off the prepared state table
-    with pytest.raises(ValueError, match="PreparedRegionsSubdivided"):
+    with pytest.raises(ValueError, match="refine_mode must be"):
         spatial_join(mentions, prep, broadcast=False, refine_mode="rows")
     # explicit broadcast of an over-guard state raises at join time
     prep.fits_broadcast = False
