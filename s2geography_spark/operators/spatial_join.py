@@ -5,27 +5,32 @@ This operator IS the engine's replacement for the reference's in-memory
 shared S2ShapeIndex, candidates are produced by a hash equi-join on covering
 cell ids, then refined with the exact predicate kernels.
 
-Three plans, one per dim-size regime (scales to 10^12 rows / 1000
-executors):
+One refine, two dim builders, two plans (scales to 10^12 rows / 1000
+executors).  The refine is the reference's S2ShapeIndex SUBDIVIDED cell +
+S2ContainsPointQuery contract (index.h:52-91): per covering cell, an
+interior flag, or a reference point with its containment bit plus ONLY the
+ring edges crossing that cell; a candidate is contained iff ref_in XOR the
+crossing parity of arc(ref, point) (parity_refine_udf).
 
-  broadcast (PreparedRegions; dim WKB fits the broadcast guard)
-      regions: covering -> explode -> (cell key, region_id, bbox)  [driver]
-      points:  level-L ancestor key(s), pure Column bit math       [map-only]
-      -> broadcast hash join on the cell key + bbox condition      [NO shuffle]
-      -> refine by region id: winding-number PIP against polygons
-         shipped once per executor in a broadcast variable        [map-only]
-  subdivided_broadcast (dim WKB too large, per-cell state fits)
-      regions: covering -> explode -> per-cell SUBDIVIDED state (ref point
-               containment bit + only the edges crossing that cell)
-      -> broadcast hash join, crossing-parity refine               [NO shuffle]
-  subdivided (state too large to broadcast)
-      the same state table; interior cells join map-only, the boundary
-      band takes ONE salted fact-side hash exchange into the parity refine
+  dim builders -> one per-cell state table (cell key, region attrs,
+                  _full, _state, bbox)
+      PreparedRegions (prepare_regions; guarded-small dim): one collect
+          (or the source's row sidecar), state built on the driver, a
+          literal LocalRelation
+      PreparedRegionsSubdivided / the inline build (any dim): the same
+          state from the distributed subdivided_state_udf
+  plans (points: level-L ancestor key(s), pure Column bit math [map-only])
+      state broadcast ('subdivided_broadcast'; every PreparedRegions)
+          -> broadcast hash join on the cell key + bbox condition
+          -> parity refine, interior cells pass unrefined       [NO shuffle]
+      salted shuffle ('subdivided'; state too large to broadcast)
+          interior cells join map-only, the boundary band takes ONE salted
+          fact-side hash exchange into the parity refine
 
 With a broadcastable dim the whole join is shuffle-free: the only wide
 operation in a typical query is the user's downstream aggregation.
-broadcast=False with refine_mode='auto' picks between the two subdivided
-plans from one tiny dim-side stats action.
+broadcast=False with refine_mode='auto' picks between the two plans from
+one tiny dim-side stats action.
 
 Correctness notes: a region's covering cells are disjoint (normalized
 covering), so a point's ancestor chain hits at most one covering cell per
@@ -60,163 +65,6 @@ def leaf_cell_udf(lng: pd.Series, lat: pd.Series) -> pd.Series:
     if bad.any():
         out[bad] = None
     return out
-
-
-# per-worker prepared-region cache, keyed by a UUID minted in
-# PreparedRegions.__init__ (NOT id(bc): the Broadcast wrapper is
-# re-deserialized per task, so id() churns — and a GC'd wrapper's id can be
-# reused by a *different* join's broadcast, silently serving wrong regions).
-# Bounded: long-lived workers see many joins; each entry holds the full
-# padded edge tensor.
-_WORKER_GEOG_CACHE: dict = {}
-_WORKER_GEOG_CACHE_MAX = 4
-
-
-def _worker_cache_get(key: str, build):
-    state = _WORKER_GEOG_CACHE.get(key)
-    if state is None:
-        state = build()
-        while len(_WORKER_GEOG_CACHE) >= _WORKER_GEOG_CACHE_MAX:
-            _WORKER_GEOG_CACHE.pop(next(iter(_WORKER_GEOG_CACHE)))
-        _WORKER_GEOG_CACHE[key] = state
-    return state
-
-
-def _build_padded_edges(wkbs: dict):
-    """(id->row, edges_a (R, E, 3), edges_b (R, E, 3)) with per-region ring
-    edges padded by degenerate (a == b) edges — a degenerate edge subtends a
-    zero turn angle, so padding never changes the winding number.
-
-    Both a float32 tensor (the hot-loop default: halves memory traffic of
-    the bandwidth-bound refine) and a float64 copy (the boundary-band
-    recheck path) are kept; broadcastable dims are small, so the extra copy
-    is bounded by the same broadcast guardrail."""
-    ids = sorted(wkbs)
-    eas, ebs = [], []
-    for r in ids:
-        g = from_wkb(wkbs[r])
-        ra, rb = g.ring_edges_xyz()
-        eas.append(ra)
-        ebs.append(rb)
-    emax = max((len(a) for a in eas), default=1) or 1
-    R = len(ids)
-    pa64 = np.zeros((R, emax, 3), dtype=np.float64)
-    pb64 = np.zeros((R, emax, 3), dtype=np.float64)
-    pa64[:, :, 0] = 1.0  # unit dummy vertex (degenerate edge = zero turn)
-    pb64[:, :, 0] = 1.0
-    for i, (a, b) in enumerate(zip(eas, ebs)):
-        if len(a):
-            pa64[i, :len(a)] = a
-            pb64[i, :len(b)] = b
-            # pad with the region's OWN first vertex (still degenerate =
-            # zero turn): a fixed (1,0,0) pad would sit in the data domain
-            # and spuriously trip the near-vertex recheck flag for every
-            # point near lng=0,lat=0
-            pa64[i, len(a):] = a[0]
-            pb64[i, len(a):] = a[0]
-    row_of = {r: i for i, r in enumerate(ids)}
-    has_rings = np.array([len(a) > 0 for a in eas])
-    return row_of, pa64.astype(np.float32), pb64.astype(np.float32), \
-        has_rings, pa64, pb64
-
-
-def _winding_positive(pa, pb, rrows, xyz, chunk):
-    """Gathered winding-number pass: for row i, winding of xyz[i] w.r.t.
-    the edge block pa[rrows[i]], pb[rrows[i]].  Returns (positive mask,
-    near-boundary mask) where 'near' flags rows whose float32 winding could
-    differ from float64, via two signatures:
-      * any per-edge subtended angle approaches pi (point within the float
-        error band of an edge INTERIOR sees that edge at ~pi), or
-      * any projected endpoint vector |da|^2 = 1-(a.p)^2 or |db|^2 below
-        1e-6 (point within ~1e-3 rad ~ 6 km of an edge VERTEX, where the
-        angle is numerically meaningless — the max-angle test alone misses
-        this).  1-(a.p)^2 reuses the ALREADY-computed projection dot
-        products, so the flag costs only elementwise ops; float32
-        cancellation floors the computed value at eps ~ 1.2e-7, so the
-        threshold sits ~8x above the floor (a true on-vertex point cannot
-        escape the flag) and the ~6 km band only adds rare harmless
-        rechecks."""
-    n = len(rrows)
-    pos = np.zeros(n, dtype=bool)
-    near = np.zeros(n, dtype=bool)
-    one = np.float32(1.0) if pa.dtype == np.float32 else 1.0
-    for lo in range(0, n, chunk):
-        sl = slice(lo, min(lo + chunk, n))
-        a = pa[rrows[sl]]            # (m, E, 3)
-        b = pb[rrows[sl]]
-        p = xyz[sl][:, None, :]      # (m, 1, 3)
-        ap = sphere.dot(a, p)
-        bp = sphere.dot(b, p)
-        da = a - ap[..., None] * p
-        db = b - bp[..., None] * p
-        s = sphere.dot(np.cross(da, db), p)
-        c = sphere.dot(da, db)
-        ang = np.arctan2(s, c)
-        w = np.rint(ang.sum(axis=1, dtype=np.float64) / (2.0 * np.pi))
-        pos[sl] = w > 0
-        n2 = np.minimum(one - ap * ap, one - bp * bp)
-        near[sl] = (np.abs(ang).max(axis=1) > (np.pi - 1e-3)) \
-            | (n2.min(axis=1) < 1e-6)
-    return pos, near
-
-
-def _refine_by_region_udf(bc, cache_key: str, chunk: int = 8192):
-    """Refine UDF keyed by region id: polygons come from a Spark broadcast
-    (one copy per executor), decoded lazily per worker process — the
-    reference's scalar-prepare / per-worker index cache analog
-    (sedona_udf_internal.h:849-867).  The join pipe carries ONLY the int id,
-    not the WKB (3 KB/row saved through the Arrow boundary).
-
-    The whole Arrow batch is refined in ONE gathered winding-number pass:
-    each candidate row's region edge-block is gathered from a padded
-    (R, Emax, 3) tensor, so cost is a handful of NumPy ops per chunk
-    instead of per (batch x region) group.
-
-    Semantics: winding-number point-in-polygon — the SEMI_OPEN 'contains'
-    refine.  For point facts 'intersects' coincides with 'contains' except
-    for points exactly ON a region edge (measure-zero for float inputs);
-    that float-level boundary behavior matches the reference's for
-    non-exact inputs.  There is deliberately no 'model' parameter: this
-    path serves both predicates under that documented tolerance.
-
-    Boundary-band recheck: rows whose winding pass sees any edge at an
-    angle within 1e-3 of pi (the signature of a point within the float32
-    error band of a boundary) are re-evaluated with float64 edges and
-    coordinates, so this path agrees bit-for-bit with the float64 shuffle
-    refine even for points planted micrometres from an edge."""
-
-    @pandas_udf(T.BooleanType())
-    def udf(rid: pd.Series, lng: pd.Series, lat: pd.Series,
-            full: pd.Series) -> pd.Series:
-        state = _worker_cache_get(cache_key,
-                                  lambda: _build_padded_edges(bc.value))
-        row_of, pa, pb, has_rings, pa64, pb64 = state
-        n = len(rid)
-        lngv = lng.to_numpy(dtype=np.float64)
-        latv = lat.to_numpy(dtype=np.float64)
-        rids = rid.to_numpy()
-        bad = rid.isna().to_numpy() | np.isnan(lngv) | np.isnan(latv)
-        # interior-cell shortcut rows need no winding at all
-        fullv = full.fillna(False).to_numpy(dtype=bool) & ~bad
-        todo = np.where(~fullv & ~bad)[0]
-        res = fullv.copy()
-        if len(todo):
-            xyz64 = np.stack(C.lnglat_to_xyz(lngv[todo], latv[todo]), axis=-1)
-            rrows = np.array([row_of.get(r, 0) for r in rids[todo]],
-                             dtype=np.int64)
-            sub, near = _winding_positive(pa, pb, rrows,
-                                          xyz64.astype(np.float32), chunk)
-            if near.any():
-                nz = np.where(near)[0]
-                sub[nz], _ = _winding_positive(pa64, pb64, rrows[nz],
-                                               xyz64[nz], chunk)
-            sub &= has_rings[rrows]
-            res[todo] = sub
-        out = pd.Series(res, dtype=object)
-        out[bad] = None
-        return pd.Series(out, dtype=object)
-
-    return udf
 
 
 def ancestors_at_levels(cell_col, levels):
@@ -281,53 +129,20 @@ def dim_broadcast_stats(regions: DataFrame, region_geog: str,
     return int(row.n or 0), int(row.b or 0), cells
 
 
-def dim_is_broadcastable(regions: DataFrame, region_geog: str,
-                         max_rows: int = None,
-                         max_bytes: int = None,
-                         covering_col: str = None,
-                         max_cells: int = None) -> bool:
-    n, b, c = dim_broadcast_stats(regions, region_geog, covering_col)
-    if c is not None and c > (max_cells if max_cells is not None
-                              else MAX_BROADCAST_EXPLODED_CELLS):
-        return False
-    return (n <= (max_rows if max_rows is not None else MAX_BROADCAST_DIM_ROWS)
-            and b <= (max_bytes if max_bytes is not None
-                      else MAX_BROADCAST_DIM_BYTES))
-
-
-def _interior_cell_flags(cells_u64, ra, rb):
-    """Per covering cell: True iff the cell is PROVABLY fully inside the
-    region.  Evidence: all 4 cell corners strictly inside (open model), no
-    cell edge crosses any ring edge, and no ring VERTEX lies inside the
-    cell — a hole (or island) ring strictly inside one cell leaves no
-    corner/crossing evidence (round-4 ADVICE, spatial_join hole
-    unsoundness), but its vertices' leaf cells fall within the cell's
-    [range_min, range_max], which is a cheap vectorized test."""
-    quads = C.cell_vertices_xyz(cells_u64)  # (n, 4, 3)
-    corners_in = sphere.contains_points(
-        quads.reshape(-1, 3), ra, rb, model="open").reshape(-1, 4)
-    qb = quads[:, [1, 2, 3, 0]]
-    crosses = sphere.arcs_cross(
-        quads[:, :, None, :], qb[:, :, None, :],
-        ra[None, None, :, :], rb[None, None, :, :]).any(axis=(1, 2))
-    vleaf = C.from_xyz(ra[:, 0], ra[:, 1], ra[:, 2])  # (E,) vertex leaf ids
-    lo = C.range_min(cells_u64)[:, None]
-    hi = C.range_max(cells_u64)[:, None]
-    vertex_in = ((vleaf[None, :] >= lo) & (vleaf[None, :] <= hi)).any(axis=1)
-    return corners_in.all(axis=1) & ~crosses & ~vertex_in
-
-
 class PreparedRegions:
-    """Prepared dim side of the spatial join — the engine analog of the
-    reference's ShapeIndexGeography 'prepared geometry' (geography.h:182-210):
-    exploded covering cells, broadcast polygon bytes, and bbox prefilter
-    columns, built once and reused across any number of point-side joins."""
+    """Prepared dim side of the broadcast join, built on the driver — the
+    engine analog of the reference's ShapeIndexGeography 'prepared
+    geometry' (geography.h:182-210).  It holds the same exploded per-cell
+    SUBDIVIDED state table as :class:`PreparedRegionsSubdivided` (mixed
+    join key, interior flag, packed state blob, bbox prefilter columns;
+    see _subdivided_exploded), computed from ONE collect of the guarded-
+    small dim instead of a distributed UDF pass, and reused across any
+    number of point-side joins."""
 
     def __init__(self, spark, regions: DataFrame, region_geog: str,
                  region_id: str, covering_col: str,
                  max_rows: int = None, max_bytes: int = None,
                  max_cells: int = None):
-        import uuid
         from ..core import ops as _ops
         max_rows = MAX_BROADCAST_DIM_ROWS if max_rows is None else max_rows
         max_bytes = MAX_BROADCAST_DIM_BYTES if max_bytes is None else max_bytes
@@ -340,10 +155,9 @@ class PreparedRegions:
                 f"{b} geography bytes, {c} exploded covering cells > "
                 f"{max_rows}/{max_bytes}/{max_cells}); use "
                 "spatial_join(..., broadcast=False) (shuffle path)")
-        self.cache_key = uuid.uuid4().hex
         self.region_id = region_id
         # ONE collect of the whole (small-by-contract, just guarded) dim;
-        # bbox, interior flags, covering levels, and the mixed join keys
+        # bbox, per-cell state, covering levels, and the mixed join keys
         # are all computed driver-side from it.  The previous build ran 5
         # Spark jobs (stats, collect, two join shuffles for bbox/interior
         # attachment, covering-levels distinct) — measured as the dominant
@@ -357,36 +171,36 @@ class PreparedRegions:
         rows = getattr(regions, "_s2_dim_rows", None)
         if rows is None:
             rows = regions.collect()
-        wkb_map = {}
         exploded_rows = []
         levels = set()
+        state_bytes = 0
         for r in rows:
-            rid = r[region_id]
             w = r[region_geog]
             cov = r[covering_col]
             if w is None or cov is None:
                 continue
-            w = bytes(w)
-            wkb_map[rid] = w
-            g = from_wkb(w)
+            g = from_wkb(bytes(w))
             bb = _ops.s2_bounds(g) or (None,) * 4
             cells = np.array(cov, dtype=np.int64).view(np.uint64)
             levels.update(int(l) for l in np.unique(C.level(cells)))
-            ra, rb = g.ring_edges_xyz()
-            # interior-covering shortcut (reference INDEXED/SUBDIVIDED
-            # distinction, index.h:52-91): cell fully inside the region
-            # -> every point in it is contained, no PIP refine needed
-            full = _interior_cell_flags(cells, ra, rb) \
-                if len(cells) and len(ra) else np.zeros(len(cells), bool)
             ck = (cells ^ (cells >> np.uint64(31))).view(np.int64)
             base = tuple(r[c] for c in other_cols)
-            for j in range(len(cells)):
-                exploded_rows.append(
-                    base + (bool(full[j]), int(ck[j])) + bb)
-        self.bc = spark.sparkContext.broadcast(wkb_map)
+            for k, (full, state) in zip(ck.tolist(), _cell_states(g, cells)):
+                state_bytes += len(state) if state is not None else 0
+                exploded_rows.append(base + (full, state, k) + bb)
+        # the state table is what gets broadcast: bound its bytes too
+        if state_bytes > max_bytes:
+            raise DimTooLargeError(
+                f"subdivided state too large for the broadcast path "
+                f"({state_bytes} bytes > {max_bytes}); use "
+                "spatial_join(..., broadcast=False) (shuffle path)")
+        self.state_cells = len(exploded_rows)
+        self.state_bytes = state_bytes
+        self.fits_broadcast = True
         schema = T.StructType(
             [regions.schema[c] for c in other_cols]
             + [T.StructField("_full", T.BooleanType()),
+               T.StructField("_state", T.BinaryType()),
                T.StructField("_ck", T.LongType()),
                T.StructField("_xmin", T.DoubleType()),
                T.StructField("_ymin", T.DoubleType()),
@@ -434,14 +248,12 @@ def _subdivided_exploded(regions: DataFrame, region_geog: str,
 
 
 class PreparedRegionsSubdivided:
-    """Prepared dim state for the NON-broadcastable-dim (shuffle-family)
-    join plans — the subdivided-state analog of :class:`PreparedRegions`
-    (reference MutableS2ShapeIndex reuse, geography.h:182-210): the
-    exploded per-cell state table is built ONCE (the per-region
-    subdivided_state_udf is the dominant dim-side cost), pinned with an
-    eager localCheckpoint, and reused across any number of point-side
-    joins, along with the broadcast-fit stats and the distinct cell-key
-    set the fact-side semi-join prefilter broadcasts.
+    """Prepared dim state built by the distributed builder — the same
+    per-cell state table as :class:`PreparedRegions` (reference
+    MutableS2ShapeIndex reuse, geography.h:182-210), but built ONCE by the
+    per-region subdivided_state_udf (the dominant dim-side cost), pinned
+    with an eager localCheckpoint, and reused across any number of
+    point-side joins along with its broadcast-fit stats.
 
     Unlike PreparedRegions this never collects anything to the driver and
     has NO size guard — it exists precisely for dims too large to
@@ -464,10 +276,6 @@ class PreparedRegionsSubdivided:
         self.fits_broadcast = (
             self.state_cells <= MAX_BROADCAST_INDEX_ROWS
             and self.state_bytes <= MAX_BROADCAST_DIM_BYTES)
-        # distinct mixed keys (8 B/cell) for the pre-exchange semi-join;
-        # derived from the checkpointed table, so no second UDF pass
-        self.keys = (self.exploded.select(F.col("_ck").alias("_ckf"))
-                     .distinct().localCheckpoint(eager=True))
 
 
 def prepare_regions_subdivided(
@@ -553,14 +361,17 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     for point facts they differ only for points exactly ON a region edge
     (measure-zero for float inputs).
 
-    Plans (see the module docstring):
+    Plans (see the module docstring): every plan joins the cell keys
+    against one per-cell SUBDIVIDED state table and runs the same
+    crossing-parity refine; they differ in how that table is built and
+    whether it is broadcast.
       * broadcast=True (default) or a :class:`PreparedRegions` dim: the
-        broadcast plan — map-only candidate join, refine by region id
-        against polygons broadcast once per executor.  A plain dim that
-        overflows the broadcast guard falls back to the plans below.
-      * broadcast=False: refine_mode picks the per-cell SUBDIVIDED-state
-        plan — 'subdivided_broadcast' (state table broadcast, fact side
-        map-only; raises when the state overflows the guard),
+        state is built on the driver and broadcast — map-only candidate
+        join and refine.  A plain dim that overflows the broadcast guard
+        falls back to the broadcast=False plans.
+      * broadcast=False: the state is built by a distributed UDF and
+        refine_mode picks 'subdivided_broadcast' (state table broadcast,
+        fact side map-only; raises when the state overflows the guard),
         'subdivided' (one salted fact-side hash exchange), or 'auto'
         (default: one tiny dim-side stats action broadcasts the state
         when it fits and shuffles otherwise).
@@ -595,13 +406,12 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     corpus — the fact side carries only the leaf id in `leaf_col` and the
     refine reconstructs the exact cell center.
 
-    regions may also be a :class:`PreparedRegions` (from prepare_regions) to
-    amortize the dim-side preparation (broadcast, bbox, covering explode)
-    across many point-side joins, or a :class:`PreparedRegionsSubdivided`
-    (from prepare_regions_subdivided) for the subdivided plans — the
-    exploded subdivided-state table, its broadcast-fit stats, and the
-    prefilter key set are then built once and reused; refine_mode 'auto'
-    resolves from the prepared stats with no extra job.
+    regions may also be a :class:`PreparedRegions` (from prepare_regions)
+    or a :class:`PreparedRegionsSubdivided` (from
+    prepare_regions_subdivided) to amortize the dim-side preparation across
+    many point-side joins: the exploded state table and its broadcast-fit
+    stats are built once and reused; refine_mode 'auto' resolves from the
+    prepared stats with no extra job.
 
     prefilter ('subdivided' only): broadcast the dim's DISTINCT cell-key
     set (8 B/cell — broadcastable even when nothing else about the dim is)
@@ -633,16 +443,10 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
         if leaf_col is None and key_col is None:
             raise ValueError("coords='leaf' requires leaf_col (the corpus "
                              "has no lng/lat to derive the leaf id from)")
-    prep: Optional[PreparedRegions] = None
-    sub_prep: Optional[PreparedRegionsSubdivided] = None
-    if isinstance(regions, PreparedRegionsSubdivided):
-        # prepared shuffle-family dim: state already built/checkpointed,
-        # broadcast flag is moot (this prep exists for non-broadcastable
-        # dims)
-        sub_prep = regions
-        region_id = sub_prep.region_id
-        broadcast = False
-    elif isinstance(regions, PreparedRegions):
+    prep = None
+    if isinstance(regions, (PreparedRegions, PreparedRegionsSubdivided)):
+        # prepared dim: the state table and its broadcast-fit stats were
+        # built once by one of the two builders
         prep = regions
         region_id = prep.region_id
     else:
@@ -701,47 +505,29 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
         else:
             pts = pts.withColumn("_ck", cell_join_key(F.col("_leaf")))
     else:
-        if prep is not None:
-            levels = prep.levels
-        elif sub_prep is not None:
-            levels = sub_prep.levels
-        else:
-            levels = covering_levels(regions, covering_col)
+        levels = prep.levels if prep is not None \
+            else covering_levels(regions, covering_col)
         pts = pts.withColumn(
             "_cell", F.explode(ancestors_at_levels(F.col("_leaf"), levels)))
         pts = pts.withColumn("_ck", cell_join_key(F.col("_cell"))).drop("_cell")
 
-    if prep is not None:
-        # broadcast-dim fast path: the candidate join carries ONLY the int
-        # region id; polygons travel once via a broadcast variable and are
-        # decoded/prepared per worker (geog WKB never crosses Arrow per row).
-        ex = prep.exploded
-        cond = (pts["_ck"] == ex["_ck"]) & _bbox_ok(pts, ex, lng, lat)
-        cand = (pts.join(F.broadcast(ex), cond, "inner")
-                .drop(ex["_ck"])
-                .drop("_xmin", "_ymin", "_xmax", "_ymax"))
-        # interior-cell shortcut: candidates in cells fully inside the
-        # region skip the winding math inside the refine kernel
-        refine = _refine_by_region_udf(prep.bc, prep.cache_key)
-        refined = cand.where(refine(F.col(region_id), F.col(lng),
-                                    F.col(lat), F.col("_full")))
-        return refined.drop("_leaf", "_ck", "_full")
-
-    # non-broadcastable dim WKB: the per-cell SUBDIVIDED state (ref-point
-    # containment bit + only the ring edges intersecting the matched cell,
-    # ~150 B/boundary cell, no polygon bytes anywhere) replaces the region
-    # WKB, and the refine is vectorized crossing parity (parity_refine_udf)
-    # — no WKB decode at all.  Interior-cell candidates need no refine.
+    # the per-cell SUBDIVIDED state (ref-point containment bit + only the
+    # ring edges intersecting the matched cell, ~150 B/boundary cell, no
+    # polygon bytes anywhere) stands in for the region WKB, and the refine
+    # is vectorized crossing parity (parity_refine_udf) — no WKB decode at
+    # all.  Interior-cell candidates need no refine.
     #   subdivided_broadcast: the state TABLE is broadcast — fact side
     #     MAP-ONLY, zero fact exchange.  The state excludes polygon
     #     interiors, so it usually broadcasts when the WKB cannot; measured
     #     2.7x faster than the shuffling form on the 80M-mention bench.
+    #     A driver-built PreparedRegions always takes this plan (its guard
+    #     raised otherwise).
     #   subdivided: ONE fact-side shuffle on the (salted) cell key for the
     #     boundary band; the state blob rides the candidate rows.
     # 'auto' lets ONE tiny dim-side stats action decide: broadcast the
     # state when it fits (it beats shipping the blob with every candidate
     # row at ANY match rate), shuffle otherwise.
-    exploded = sub_prep.exploded if sub_prep is not None \
+    exploded = prep.exploded if prep is not None \
         else _subdivided_exploded(regions, region_geog, covering_col)
     # coords="leaf": CELL-CENTER corpus (reference compact tagged
     # encoding, encoding.py CELL_CENTER) — the fact side carries ONLY
@@ -753,21 +539,23 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     pts = pts.withColumnRenamed("_ck", "_ckp")
     if not leaf_mode:
         pts = pts.drop("_leaf")
-    if sub_prep is not None:
+    if isinstance(prep, PreparedRegions):
+        refine_mode = "subdivided_broadcast"
+    elif prep is not None:
         # stats were paid once at prepare time; resolve the mode from
         # them with no extra action
         if refine_mode == "auto":
             refine_mode = "subdivided_broadcast" \
-                if sub_prep.fits_broadcast else "subdivided"
+                if prep.fits_broadcast else "subdivided"
         elif refine_mode == "subdivided_broadcast" and \
-                not sub_prep.fits_broadcast:
+                not prep.fits_broadcast:
             raise ValueError(
                 f"subdivided state too large to broadcast "
-                f"({sub_prep.state_cells} cells, "
-                f"{sub_prep.state_bytes} bytes); use "
+                f"({prep.state_cells} cells, "
+                f"{prep.state_bytes} bytes); use "
                 "refine_mode='subdivided'")
-    n_state_cells = sub_prep.state_cells if sub_prep is not None else None
-    if refine_mode != "subdivided" and sub_prep is None:
+    n_state_cells = prep.state_cells if prep is not None else None
+    if refine_mode != "subdivided" and prep is None:
         # materialize ONCE: without this the stats guard runs the
         # per-region subdivided_state_udf over the whole dim, and the
         # broadcast then re-executes the same UDF from scratch at join
@@ -829,7 +617,7 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     # pandas UDF is evaluated on every row of its projection; F.when
     # cannot short-circuit it) — and on the bench corpus they are ~2/3
     # of all candidates.
-    if sub_prep is None and prefilter:
+    if prep is None and prefilter:
         # one state-UDF pass total: the full slice's broadcast build,
         # the boundary join side, and the boundary key set would each
         # re-run the per-region subdivided_state_udf otherwise
@@ -1049,25 +837,44 @@ def _subdivide_region(cells_u64, ra, rb):
     qb = quads[:, [1, 2, 3, 0]]
     if len(ra) == 0:
         return [(False, False, None, []) for _ in range(n)]
+    # adjacent cells share corners: test each distinct corner once
+    corners, inv = np.unique(quads.reshape(-1, 3), axis=0,
+                             return_inverse=True)
     corners_in = sphere.contains_points(
-        quads.reshape(-1, 3), ra, rb, model="open").reshape(-1, 4)
-    # (n, 4, E) cell-edge x ring-edge interactions.  The near-contact
-    # dilation uses the endpoint-distance stack DIRECTLY rather than
-    # arc_arc_distance, which would re-run the identical arcs_cross tensor
-    # internally (sphere.py:100) — crossing pairs are already included via
-    # cross_full, so zeroing their distance would be redundant work.
-    A = quads[:, :, None, :]
-    B = qb[:, :, None, :]
-    Cc = ra[None, None, :, :]
-    D = rb[None, None, :, :]
-    cross_full = sphere.arcs_cross(A, B, Cc, D)
-    near = np.minimum(
+        corners, ra, rb, model="open")[inv.reshape(-1)].reshape(-1, 4)
+    centers = np.stack(C.to_xyz(cells_u64), axis=-1)          # (n, 3)
+    dist_all = sphere.point_arc_distance(
+        centers[:, None, :], ra[None, :, :], rb[None, :, :])   # (n, E)
+    # (n, 4, E) cell-edge x ring-edge interactions, run only on the
+    # (cell, ring edge) pairs that can hit; the result equals running them
+    # on every pair.  A cell lies inside the cap around its center through
+    # its farthest vertex.  A ring edge farther than that radius plus a
+    # margin far above float error can never be near-contact; one whose
+    # great circle misses the cap cannot pass arcs_cross either — not even
+    # as the sign-noise hit arcs_cross reports for near-collinear arcs.
+    # Edges too short for a well-defined circle are always tested.
+    ne = np.cross(ra, rb)                                      # (E, 3)
+    nn = np.linalg.norm(ne, axis=-1)
+    short = (nn < 1e-6)[None, :]
+    rad = sphere.angle(centers[:, None, :], quads).max(axis=1)[:, None]
+    circ = np.abs(centers @ (ne / np.where(nn > 0, nn, 1.0)[:, None]).T)
+    touches = np.zeros((n, len(ra)), dtype=bool)               # (n, E)
+    ci, ei = np.nonzero(
+        (circ <= np.sin(np.minimum(rad + 1e-6, np.pi / 2))) | short)
+    touches[ci, ei] = sphere.arcs_cross(
+        quads[ci], qb[ci], ra[ei][:, None, :], rb[ei][:, None, :]
+    ).any(axis=1)
+    # the near-contact dilation uses the endpoint-distance stack DIRECTLY
+    # rather than arc_arc_distance, which would re-run arcs_cross
+    ci, ei = np.nonzero((dist_all <= rad + 1e-6) | short)
+    A, B = quads[ci], qb[ci]                                   # (m, 4, 3)
+    Cc, D = ra[ei][:, None, :], rb[ei][:, None, :]             # (m, 1, 3)
+    touches[ci, ei] |= (np.minimum(
         np.minimum(sphere.point_arc_distance(A, Cc, D),
                    sphere.point_arc_distance(B, Cc, D)),
         np.minimum(sphere.point_arc_distance(Cc, A, B),
                    sphere.point_arc_distance(D, A, B))
-    ) <= _SUBDIV_TOUCH_EPS
-    touches = (cross_full | near).any(axis=1)       # (n, E)
+    ) <= _SUBDIV_TOUCH_EPS).any(axis=1)
     va = C.from_xyz(ra[:, 0], ra[:, 1], ra[:, 2])   # (E,) vertex leaf ids
     vb = C.from_xyz(rb[:, 0], rb[:, 1], rb[:, 2])
     lo = C.range_min(cells_u64)[:, None]
@@ -1081,9 +888,6 @@ def _subdivide_region(cells_u64, ra, rb):
     # a robust parity origin.  Common case fully batched: ONE winding pass
     # over every center + one masked distance matrix; the rare fallback
     # (center within eps of a boundary edge) loops only its own cells.
-    centers = np.stack(C.to_xyz(cells_u64), axis=-1)          # (n, 3)
-    dist_all = sphere.point_arc_distance(
-        centers[:, None, :], ra[None, :, :], rb[None, :, :])   # (n, E)
     dmin = np.where(subset, dist_all, np.inf).min(axis=1)
     rin_all = sphere.winding_number(centers, ra, rb) > 0       # (n,)
     edges6 = np.concatenate([ra, rb], axis=1)       # (E, 6)
@@ -1127,6 +931,21 @@ def _pack_state(rin: bool, ref, edges) -> bytes:
     return bytes([1 if rin else 0]) + head.tobytes() + body.tobytes()
 
 
+def _cell_states(g, cells_u64):
+    """Per covering cell of region `g`: (full, packed state blob or None
+    for a full cell) — the one state builder behind both dim builders
+    (PreparedRegions on the driver, subdivided_state_udf distributed)."""
+    if not len(cells_u64):
+        return []
+    ra, rb = g.ring_edges_xyz()
+    return [(True, None) if full else
+            (False, _pack_state(
+                bool(rin), (np.nan,) * 3 if ref is None else ref,
+                np.zeros((0, 6)) if edges is None or len(edges) == 0
+                else edges))
+            for full, rin, ref, edges in _subdivide_region(cells_u64, ra, rb)]
+
+
 @pandas_udf(_SUBDIV_STATE_TYPE)
 def subdivided_state_udf(wkb: pd.Series, covering: pd.Series) -> pd.Series:
     """Dim-side prep: per region row, the subdivided-cell state array
@@ -1137,20 +956,8 @@ def subdivided_state_udf(wkb: pd.Series, covering: pd.Series) -> pd.Series:
             out.append(None)
             continue
         cells = np.array(cov, dtype=np.int64).view(np.uint64)
-        g = from_wkb(bytes(b))
-        ra, rb = g.ring_edges_xyz()
-        rows = []
-        for full, rin, ref, edges in _subdivide_region(cells, ra, rb):
-            if full:
-                rows.append({"full": True, "state": None})
-            else:
-                rows.append({"full": False,
-                             "state": _pack_state(
-                                 bool(rin),
-                                 (np.nan,) * 3 if ref is None else ref,
-                                 np.zeros((0, 6)) if edges is None
-                                 or len(edges) == 0 else edges)})
-        out.append(rows)
+        out.append([{"full": full, "state": state} for full, state
+                    in _cell_states(from_wkb(bytes(b)), cells)])
     return pd.Series(out, dtype=object)
 
 
@@ -1193,7 +1000,8 @@ def _parity_refine_impl(state: pd.Series, lng: pd.Series,
     if parts and k_u.sum():
         eflat = np.concatenate(parts)                    # (K, 6)
         starts = np.concatenate([[0], np.cumsum(k_u)[:-1]])
-        k_row = k_u[safe]
+        # null-state rows (interior-cell candidates) gather no edges
+        k_row = np.where(bad, 0, k_u[safe])
         total = int(k_row.sum())
         if total:
             row_idx = np.repeat(np.arange(n), k_row)

@@ -1,6 +1,11 @@
-"""Local pre-flight for the driver's correctness gate: run every queries()
-entry on Spark at sf0.01 and compare against oracle_sql() in DuckDB
-(row count + column names + order-insensitive values).
+"""Correctness gate: run every queries() entry on Spark at sf0.01 and
+compare against its oracle_sql() in DuckDB (row count + column names +
+order-insensitive values, floats rounded to 9 decimals).
+
+Usage: python scripts/check_oracles.py [query ...]   (default: all)
+
+CHECK_ORACLES_SF_DIR overrides the data directory; SPARK_GRAFT_CPUS sets
+the local core count.  Exits non-zero when any query fails.
 """
 
 from __future__ import annotations
@@ -9,7 +14,7 @@ import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
@@ -36,7 +41,7 @@ def norm_rows(cols, rows):
 
 
 def main():
-    spark = get_spark("check_oracles", cpus=8, shuffle_partitions=8)
+    spark = get_spark("check_oracles", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
@@ -44,6 +49,7 @@ def main():
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
+    unchecked = 0
     only = sys.argv[1:] or list(qs)
     for name in only:
         fn = qs[name]
@@ -57,6 +63,7 @@ def main():
             continue
         if name not in oracles:
             print(f"[rows-only] {name}: {len(srows)} rows, cols={scols}")
+            unchecked += 1
             continue
         try:
             res = con.execute(oracles[name])
@@ -85,7 +92,10 @@ def main():
             continue
         print(f"[OK] {name}: {len(sr)} rows match")
 
-    print(f"\n{len(failures)} failures" if failures else "\nALL MATCH")
+    spark.stop()
+    checked = len(only) - unchecked
+    print(f"\n{checked - len(failures)}/{checked} match"
+          + (f", {len(failures)} failures" if failures else " (ALL MATCH)"))
     sys.exit(1 if failures else 0)
 
 

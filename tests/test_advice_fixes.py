@@ -124,17 +124,24 @@ def test_touches_two_crossing_lines_false():
 def test_large_dim_falls_back_to_shuffle_path(spark, monkeypatch):
     from s2geography_spark.operators import spatial_join as sj
     from s2geography_spark.sources.regions import regions_df
-    monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 4)
     regions = regions_df(spark, 24)
     pts = spark.createDataFrame(
         [(0, 10.5, 10.5), (1, -170.0, -70.0)], "pid long, lng double, lat double")
+    want = {tuple(r) for r in sj.spatial_join(
+        pts, regions, predicate="contains", broadcast=True)
+        .select("pid", "region_id").collect()}
+    monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 4)
+    # the fallback builds the state with the distributed builder, never
+    # the driver-side PreparedRegions one
+    built = []
+    real = sj._subdivided_exploded
+    monkeypatch.setattr(sj, "_subdivided_exploded",
+                        lambda *a: built.append(a) or real(*a))
     out = sj.spatial_join(pts, regions, predicate="contains", broadcast=True)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    # non-broadcast fallback: the cogroup refine, the WKB rows refine, or
-    # the round-5 subdivided parity refine — never the broadcast-dim refine
-    assert ("FlatMapCoGroupsInPandas" in plan or "pip_refine" in plan
-            or "parity_refine" in plan)
-    assert out.count() >= 0  # executes
+    assert built and "parity_refine" in plan
+    assert {tuple(r) for r in out.select("pid", "region_id").collect()} \
+        == want
 
     with pytest.raises(ValueError, match="too large"):
         sj.PreparedRegions(spark, regions, "geog", "region_id", "covering",

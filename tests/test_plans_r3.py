@@ -180,7 +180,7 @@ def test_benchmarked_join_plans(spark):
     """The two spatial_join plans the benchmark times, plan-asserted.
 
     Prepared broadcast join (level-8 PreparedRegions): no hash exchange
-    anywhere and exactly one Python node, the region-id refine.  Shuffle-
+    anywhere and exactly one Python node, the parity refine.  Shuffle-
     family call on a small dim (broadcast=False, level=8, refine_mode
     'auto'): resolves to the broadcast subdivided state, so the fact side
     never hash-exchanges and the parity refine is the only Python node."""
@@ -195,6 +195,7 @@ def test_benchmarked_join_plans(spark):
     plan = _plan(spatial_join(pts, prep, predicate="contains", level=8))
     assert "Exchange hashpartitioning" not in plan, plan
     assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("parity_refine_udf") == 1, plan
     assert "BroadcastHashJoin" in plan, plan
 
     dense = spatial_join(pts, regions_df(spark, 24, covering_level=8),

@@ -191,8 +191,10 @@ def test_knn_covering_matches_brute_force(spark, mentions):
 
 def test_boundary_band_broadcast_matches_shuffle(spark):
     """Round-3 fix: points planted within ~1 um .. 1 km of region edges get
-    identical join rows on the float32 broadcast refine (with its float64
-    boundary-band recheck) and the shuffle plan's float64 parity refine."""
+    identical join rows on the driver-built broadcast plan, the salted
+    shuffle plan, and the direct float64 semi-open point-in-polygon kernel
+    (the two plans share one parity refine, so the kernel is the check)."""
+    from s2geography_spark.core import cellid as C
     n_regions = 12
     rs = np.arange(n_regions)
     lng0, lat0, lng1, lat1 = region_corners(rs)
@@ -220,6 +222,14 @@ def test_boundary_band_broadcast_matches_shuffle(spark):
     got_b = {(r.pid, r.region_id) for r in bcast.collect()}
     got_s = {(r.pid, r.region_id) for r in shuf.collect()}
     assert got_b == got_s
+    xyz = np.stack(C.lnglat_to_xyz(np.array([r[1] for r in rows]),
+                                   np.array([r[2] for r in rows])), axis=-1)
+    ref = set()
+    for reg in regions.select("region_id", "geog").collect():
+        ra, rb = from_wkb(bytes(reg.geog)).ring_edges_xyz()
+        inside = sphere.contains_points(xyz, ra, rb, model="semi_open")
+        ref |= {(r[0], reg.region_id) for r, hit in zip(rows, inside) if hit}
+    assert got_b == ref
     # sanity: the inside-offset points actually joined
     assert len(got_b) > len(rows) / 3
 
@@ -252,29 +262,30 @@ def test_interior_shortcut_hole_inside_one_cell(spark):
 
 
 def test_interior_flags_vertex_in_cell():
-    """Unit check of the vertex-evidence rule: a cell holding a hole ring
-    must not be flagged full; a clean interior cell still is."""
+    """Unit check of the vertex-evidence rule on the per-cell state
+    builder: a cell holding a hole ring must not be flagged full; a clean
+    interior cell still is."""
     from s2geography_spark.core import cellid as C
     from s2geography_spark.core.geog import from_wkt
-    from s2geography_spark.operators.spatial_join import _interior_cell_flags
+    from s2geography_spark.operators.spatial_join import _subdivide_region
 
     g = from_wkt("POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), "
                  "(5.01 5.01, 5.01 5.03, 5.03 5.03, 5.03 5.01, 5.01 5.01))")
     ra, rb = g.ring_edges_xyz()
     hole_cell = C.from_lnglat(np.array([5.02]), np.array([5.02]), lev=8)
     clean_cell = C.from_lnglat(np.array([2.0]), np.array([2.0]), lev=10)
-    flags = _interior_cell_flags(
+    cells = _subdivide_region(
         np.concatenate([hole_cell, clean_cell]).astype(np.uint64), ra, rb)
-    assert flags.tolist() == [False, True]
+    assert [bool(full) for full, _, _, _ in cells] == [False, True]
 
 
 def test_prepared_regions_exploded_guard(spark):
     """VERDICT r4 #5: the broadcast guard must bound the POST-explosion
-    cell count, not just input rows/bytes; an oversized dim falls back to
-    the shuffle path in spatial_join and raises in PreparedRegions."""
+    cell count, not just input rows/bytes: PreparedRegions builds at the
+    exact cell count and raises DimTooLargeError one cell below it."""
     from s2geography_spark.core.geog import from_wkt, to_wkb
-    from s2geography_spark.operators.spatial_join import (PreparedRegions,
-                                                          dim_is_broadcastable)
+    from s2geography_spark.operators.spatial_join import (DimTooLargeError,
+                                                          PreparedRegions)
 
     wkb = to_wkb(from_wkt("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))"))
     regions = spark.createDataFrame([(1, bytearray(wkb))],
@@ -282,13 +293,38 @@ def test_prepared_regions_exploded_guard(spark):
     from s2geography_spark.functions.geo import s2_coveringcellids
     regions = regions.withColumn("covering", s2_coveringcellids("geog"))
     ncells = regions.select(F.sum(F.size("covering"))).collect()[0][0]
-    assert not dim_is_broadcastable(regions, "geog", covering_col="covering",
-                                    max_cells=ncells - 1)
-    assert dim_is_broadcastable(regions, "geog", covering_col="covering",
-                                max_cells=ncells)
-    with pytest.raises(ValueError, match="exploded covering cells"):
+    prep = PreparedRegions(spark, regions, "geog", "region_id", "covering",
+                           max_cells=ncells)
+    assert prep.state_cells == ncells
+    with pytest.raises(DimTooLargeError, match="exploded covering cells"):
         PreparedRegions(spark, regions, "geog", "region_id", "covering",
                         max_cells=ncells - 1)
+    # the broadcast state table is bounded too: a byte budget the WKB fits
+    # but the packed per-cell state does not raises the same error type
+    assert prep.state_bytes > len(wkb)
+    with pytest.raises(DimTooLargeError, match="subdivided state"):
+        PreparedRegions(spark, regions, "geog", "region_id", "covering",
+                        max_bytes=len(wkb))
+
+
+@pytest.mark.parametrize("dim", ["level8", "special"])
+def test_dim_builders_agree(spark, dim):
+    """The driver builder (prepare_regions) and the distributed builder
+    (prepare_regions_subdivided) emit the identical per-cell state table,
+    so the broadcast and shuffle plans refine against the same bytes."""
+    from s2geography_spark.operators.spatial_join import (
+        prepare_regions, prepare_regions_subdivided)
+    regions = regions_df(spark, 24, covering_level=8) if dim == "level8" \
+        else special_regions_df(spark)
+    cols = ["region_id", "_ck", "_full", "_state",
+            "_xmin", "_ymin", "_xmax", "_ymax"]
+    drv = prepare_regions(spark, regions).exploded.select(*cols).collect()
+    dist = prepare_regions_subdivided(spark, regions).exploded \
+        .select(*cols).collect()
+    assert sorted(map(tuple, drv)) == sorted(map(tuple, dist))
+    assert len(drv) == sum(len(r.covering) for r in
+                           regions.select("covering").collect())
+    assert any(r._full for r in drv) and any(r._state for r in drv)
 
 
 def test_subdivided_matches_brute_force(spark, mentions):
